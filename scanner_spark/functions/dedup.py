@@ -719,7 +719,7 @@ def cosine_dup_pairs(
       block but quadratic in block size — a scale-killer on a hot label.
     - ``lsh_bits`` adds a random-hyperplane LSH bucket
       (functions/simsearch.hyperplanes — deterministic, oracle-
-      reproducible) to the join key: candidates must share BOTH the label
+      reproducible) to the blocking key: candidates must share BOTH the label
       and the bucket, so the per-key pair fan-out is ~|block| / 2^bits
       squared.  Near-identical vectors agree on almost every hyperplane
       sign, so recall loss at dedup thresholds (>=0.9) is the standard,
@@ -735,9 +735,12 @@ def cosine_dup_pairs(
       components immediately collapses to one cluster anyway).
     - ``"star"``: per bucket, evaluate only (anchor, member) pairs where
       anchor = the bucket's minimum representative id — O(m) evaluations
-      and at most m-1 edges per bucket.  Exact-duplicate groups connect
-      their members to the group representative the same way.  The output
-      is a connectivity-preserving SUBSET of the "all" graph whenever the
+      and at most m-1 edges per bucket, scored by the same per-bucket
+      kernel as ``"all"`` (an anchor-row block, mega-bucket split
+      included), so both modes give bit-identical cosines for the pairs
+      they share.  Exact-duplicate groups connect their members to the
+      group representative the same way.  The output is a
+      connectivity-preserving SUBSET of the "all" graph whenever the
       bucket's near-dup set forms a clique containing the anchor (the hot
       case this mode exists for): CC closes the clique transitively.
       Recall contract (documented, tested in test_functions.py): an edge
@@ -764,7 +767,7 @@ def cosine_dup_pairs(
     # of DuckDB's list_dot_product) — numpy's .sum() would use pairwise
     # summation and break bit-exact oracle parity.  ~50x faster than the
     # interpreted zip_with/aggregate HOFs.  Squared norms are computed
-    # ONCE per vector before the pair join (identical bits to computing
+    # ONCE per vector before the pair stage (identical bits to computing
     # them per pair), so the quadratic stage does only the dot product.
     @F.pandas_udf("double")
     def sq_norm(vs: pd.Series) -> pd.Series:
@@ -774,15 +777,6 @@ def cosine_dup_pairs(
             n += A[:, j] * A[:, j]
         return pd.Series(n)
 
-    @F.pandas_udf("double")
-    def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        A = np.stack(va.to_numpy()).astype("float64")
-        B = np.stack(vb.to_numpy()).astype("float64")
-        dot = np.zeros(len(A))
-        for j in range(A.shape[1]):
-            dot += A[:, j] * B[:, j]
-        return pd.Series(dot)
-
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -790,87 +784,35 @@ def cosine_dup_pairs(
         *keys,
     )
     key_names = [c for c in base.columns if c not in ("id", "v", "n2")]
+    star = pairs_mode == "star"
 
     # Exact-duplicate collapse BEFORE the quadratic stage: bitwise-equal
     # vectors (ubiquitous in real corpora — re-crawls, mirrors; the sf1
     # bench corpus is 10x-duplicated by construction) are grouped to one
-    # representative, the pair join runs on DISTINCT vectors only, and
+    # representative, the pair stage runs on DISTINCT vectors only, and
     # pairs expand back afterwards.  A group of m copies costs m output
-    # rows instead of m^2 join work — the duplicate factor falls out of
+    # rows instead of m^2 pair work — the duplicate factor falls out of
     # the quadratic term entirely.  Bit-exactness is free: cosine of any
     # member pair equals the representative pair's (identical arrays ->
     # identical dot and norms).
     # persist (not eager localCheckpoint): materialization happens on first
     # action, and partitions stay recomputable from lineage if an executor
     # dies — checkpointed blocks would not be
-    reps = base.groupBy(*key_names, "v", "n2").agg(
-        F.min("id").alias("rid"), F.collect_list("id").alias("ids")
+    reps = track(
+        base.groupBy(*key_names, "v", "n2").agg(
+            F.min("id").alias("rid"), F.collect_list("id").alias("ids")
+        )
     )
 
-    if pairs_mode == "star":
-        from pyspark.sql import Window
-
-        # anchor = min representative id per bucket; persist AFTER the
-        # window so the anchors and members branches share one computed
-        # result instead of re-running the groupBy+window each (.explain
-        # showed the un-persisted form shuffling reps twice)
-        tagged = track(
-            reps.withColumn(
-                "__anchor", F.min("rid").over(Window.partitionBy(*key_names))
-            )
-        )
-        anchors = tagged.filter(F.col("rid") == F.col("__anchor")).select(
-            *key_names, F.col("v").alias("va"), F.col("n2").alias("n2a"),
-            F.col("rid").alias("rid_a"),
-        )
-        members = tagged.filter(F.col("rid") != F.col("__anchor")).select(
-            *key_names, "v", "n2", "rid"
-        )
-        # O(m) per bucket: one anchor row joins m-1 members
-        cross = (
-            anchors.join(members, key_names)
-            .withColumn(
-                "cosine",
-                F.round(
-                    pair_dot(F.col("va"), F.col("v"))
-                    / (F.sqrt(F.col("n2a")) * F.sqrt(F.col("n2"))),
-                    6,
-                ),
-            )
-            .filter(F.col("cosine") >= threshold)
-            # rid_a = bucket min, so the pair is already ordered
-            .select(
-                F.col("rid_a").alias("id_a"), F.col("rid").alias("id_b"), "cosine"
-            )
-        )
-        # exact-duplicate groups: star to the group representative (m-1
-        # edges, identical-vector cosine via the same n2 float path) —
-        # reads the SAME persisted tagged result as the join branches
-        intra = (
-            tagged.filter(F.size("ids") > 1)
-            .withColumn(
-                "cosine",
-                F.round(F.col("n2") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("n2"))), 6),
-            )
-            .filter(F.col("cosine") >= threshold)
-            .select(F.col("rid").alias("id_a"), F.explode("ids").alias("id_b"), "cosine")
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-        return cross.unionByName(intra)
-
-    reps = track(reps)
-
-    # Pair stage as ONE per-bucket Arrow job instead of a rep x rep join.
-    # The retired join form shipped BOTH vectors of every candidate pair
-    # through the Python boundary for pair_dot (~1 KB/pair at dim=64:
-    # 16.4M candidate pairs = ~17 GB of Arrow traffic at sf10); grouping
-    # by the blocking key ships each DISTINCT vector exactly once (~10 MB
-    # for the same corpus) and accumulates the pairwise dots bucket-
-    # locally.  Bit-exactness is preserved: D[a, b] accumulates with the
-    # SAME per-j sequence of scalar multiply-adds as the pair_dot column
-    # loop (dim outer products applied in j order), dot/n2 round-trip
-    # Arrow as exact float64, and the authoritative round()/threshold
-    # filter below stays the identical JVM expression.  The Python-side
+    # Pair stage as ONE per-bucket Arrow job: grouping by the blocking key
+    # ships each DISTINCT vector through the Python boundary exactly once
+    # and accumulates the pairwise dots bucket-locally (a rep x rep join
+    # would ship both vectors of every candidate pair: ~17 GB of Arrow
+    # traffic for the 16.4M candidate pairs of sf10, against ~10 MB).
+    # D[a, b] accumulates dim outer products in j order — the SAME
+    # sequence of scalar multiply-adds as the scalar j-loop — dot/n2
+    # round-trip Arrow as exact float64, and the authoritative
+    # round()/threshold filter below is a JVM expression.  The Python-side
     # screen at (threshold - 1e-6) only drops pairs the exact filter
     # would drop anyway — round(x, 6) moves x by < 5e-7 — so survivors
     # are untouched while the emitted candidate set shrinks from O(m^2)
@@ -890,76 +832,56 @@ def cosine_dup_pairs(
     }
 
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        # One block of a bucket: rows of chunk ci (the a side) x rows of
+        # chunk cj (the b side).  ci == cj is a triangle (every row of the
+        # group is in that chunk; keep b after a), ci < cj a rectangle of
+        # a split mega-bucket.  Chunks are disjoint hash classes of rid, so
+        # each unordered pair appears in exactly one block and the block
+        # union over (ci <= cj) is exactly the bucket's full pair triangle.
+        # Emitted (rid_a, rid_b) need not be rid-ordered — the cosine is
+        # orientation-independent and the all-mode output normalizes ids
+        # with least/greatest.
         ci, cj = int(pdf["__ci"].iat[0]), int(pdf["__cj"].iat[0])
+        pdf = pdf.sort_values("rid")
+        pa, pb = pdf[pdf["__c"] == ci], pdf[pdf["__c"] == cj]
+        if star:
+            # anchor block: the anchor is the bucket's minimum rid, so it
+            # heads its (sorted) chunk __ca; it becomes the block's only
+            # a-side row, scored against every other row — anchor first,
+            # so star pairs come out rid-ordered
+            if int(pdf["__ca"].iat[0]) != ci:
+                pa, pb = pb, pa
+            pa = pa.iloc[:1]
+        if len(pa) == 0 or len(pb) == 0:
+            return pd.DataFrame(_EMPTY_PAIRS)
+        ra, rb = pa["rid"].to_numpy(), pb["rid"].to_numpy()
+        na2 = pa["n2"].to_numpy(dtype="float64")
+        nb2 = pb["n2"].to_numpy(dtype="float64")
+        A = np.stack(pa["v"].to_numpy()).astype("float64")
+        Bm = np.stack(pb["v"].to_numpy()).astype("float64")
+        sqa, sqb = np.sqrt(na2), np.sqrt(nb2)
         parts: list[tuple[np.ndarray, ...]] = []
-        if ci == cj:
-            # triangle block: all rows are chunk ci of the bucket
-            m = len(pdf)
-            if m < 2:
-                return pd.DataFrame(_EMPTY_PAIRS)
-            pdf = pdf.sort_values("rid")  # triu over sorted rids == rid_a < rid_b
-            rid = pdf["rid"].to_numpy()
-            n2 = pdf["n2"].to_numpy(dtype="float64")
-            A = np.stack(pdf["v"].to_numpy()).astype("float64")
-            sq = np.sqrt(n2)
-            chunk = max(1, (8 << 20) // m)
-            for s in range(0, m - 1, chunk):
-                e = min(m, s + chunk)
-                D = np.zeros((e - s, m))
-                Ac = A[s:e]
-                for j in range(A.shape[1]):
-                    D += np.multiply.outer(Ac[:, j], A[:, j])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    pre = D / (sq[s:e, None] * sq[None, :])
-                keep = (np.arange(m)[None, :] > np.arange(s, e)[:, None]) & (
-                    pre >= pre_threshold
-                )
-                ri, cix = np.nonzero(keep)
-                parts.append(
-                    (rid[s + ri], rid[cix], D[ri, cix], n2[s + ri], n2[cix])
-                )
-        else:
-            # rectangle block of a split mega-bucket: chunk ci x chunk cj.
-            # Chunks are disjoint hash classes of rid, so each unordered
-            # cross pair appears in exactly this one (min, max) rectangle
-            # and the block union over (ci <= cj) is exactly the bucket's
-            # full pair triangle.  Emitted (rid_a, rid_b) need not be
-            # rid-ordered — the cosine is orientation-independent and the
-            # final output normalizes ids with least/greatest.  The dot
-            # still accumulates dim outer products in j order — per-pair
-            # bit-identical to the unsplit task.
-            pa = pdf[pdf["__c"] == ci].sort_values("rid")
-            pb = pdf[pdf["__c"] == cj].sort_values("rid")
-            if len(pa) == 0 or len(pb) == 0:
-                return pd.DataFrame(_EMPTY_PAIRS)
-            ra = pa["rid"].to_numpy()
-            rb = pb["rid"].to_numpy()
-            na2 = pa["n2"].to_numpy(dtype="float64")
-            nb2 = pb["n2"].to_numpy(dtype="float64")
-            A = np.stack(pa["v"].to_numpy()).astype("float64")
-            Bm = np.stack(pb["v"].to_numpy()).astype("float64")
-            sqa, sqb = np.sqrt(na2), np.sqrt(nb2)
-            chunk = max(1, (8 << 20) // len(pb))
-            for s in range(0, len(pa), chunk):
-                e = min(len(pa), s + chunk)
-                D = np.zeros((e - s, len(pb)))
-                Ac = A[s:e]
-                for j in range(A.shape[1]):
-                    D += np.multiply.outer(Ac[:, j], Bm[:, j])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    pre = D / (sqa[s:e, None] * sqb[None, :])
-                ri, cix = np.nonzero(pre >= pre_threshold)
-                parts.append(
-                    (ra[s + ri], rb[cix], D[ri, cix], na2[s + ri], nb2[cix])
-                )
+        chunk = max(1, (8 << 20) // len(pb))
+        for s in range(0, len(pa), chunk):
+            e = min(len(pa), s + chunk)
+            D = np.zeros((e - s, len(pb)))
+            Ac = A[s:e]
+            for j in range(A.shape[1]):
+                D += np.multiply.outer(Ac[:, j], Bm[:, j])
+            with np.errstate(divide="ignore", invalid="ignore"):
+                keep = D / (sqa[s:e, None] * sqb[None, :]) >= pre_threshold
+            if ci == cj:  # a-side rows are the leading b-side rows
+                keep &= np.arange(len(pb))[None, :] > np.arange(s, e)[:, None]
+            ri, cix = np.nonzero(keep)
+            parts.append((ra[s + ri], rb[cix], D[ri, cix], na2[s + ri], nb2[cix]))
         cols = [np.concatenate(c) for c in zip(*parts)]
         return pd.DataFrame(
             {"rid_a": cols[0], "rid_b": cols[1], "dot": cols[2],
              "n2a": cols[3], "n2b": cols[4]}
         )
 
-    # na.drop mirrors the join's null-key semantics (null never equals
-    # null, so a null blocking key produced no cross pairs there either).
+    # na.drop gives null blocking keys join semantics (null never equals
+    # null, so a null key forms no bucket and emits no cross pairs).
     # The explicit repartition is load-bearing: the reps exchange is tiny
     # (keys + one vector per distinct vector), so AQE would coalesce it
     # to ~1 partition — and the pandas stage plus the whole downstream
@@ -968,25 +890,26 @@ def cosine_dup_pairs(
     # exempt from AQE coalescing; the count follows the session's
     # parallelism, not a local constant.
     #
-    # Mega-bucket triangle split (round 17, VERDICT r16 "what's wrong"
-    # #1): a pathological blocking key — one LSH bucket holding millions
-    # of reps — would otherwise stack the WHOLE bucket's vector matrix in
-    # one task (the §2.5 skew cliff: multi-GB pandas group, one
-    # straggler).  Rows of an oversized bucket are hashed into
-    # nch = ceil(|bucket| / COSINE_SPLIT_CHUNK) chunks; sub-group (i, j),
-    # i <= j, receives chunks i and j and computes the triangle (i == j)
-    # or rectangle (i < j) block.  Every unordered rep pair lands in
-    # exactly one sub-group (same chunk -> that chunk's triangle,
-    # different chunks -> the one (min, max) rectangle), so the union
-    # over sub-groups is exactly the unsplit pair triangle with per-pair
-    # bit-identical dots, while any one task holds ~2 hash-balanced
-    # chunks of rows.  The oversized-bucket set itself is found with one
-    # count aggregate over the persisted reps and broadcast back — it is
-    # tiny by construction (each row represents > chunk_sz reps), so the
-    # common case (every real corpus so far: sf10's max block is 1973
+    # Mega-bucket triangle split: a pathological blocking key — one LSH
+    # bucket holding millions of reps — would otherwise stack the WHOLE
+    # bucket's vector matrix in one task (the §2.5 skew cliff: multi-GB
+    # pandas group, one straggler).  Rows of an oversized bucket are
+    # hashed into nch = ceil(|bucket| / COSINE_SPLIT_CHUNK) chunks;
+    # sub-group (i, j), i <= j, receives chunks i and j and computes the
+    # triangle (i == j) or rectangle (i < j) block.  Every unordered rep
+    # pair lands in exactly one sub-group (same chunk -> that chunk's
+    # triangle, different chunks -> the one (min, max) rectangle), so the
+    # union over sub-groups is exactly the unsplit pair triangle with
+    # per-pair bit-identical dots, while any one task holds ~2
+    # hash-balanced chunks of rows.  Star mode keeps only the sub-groups
+    # that hold the anchor's chunk: nch tasks instead of nch(nch+1)/2.
+    # The oversized-bucket set (with each one's anchor, min rid) is found
+    # with one aggregate over the persisted reps and broadcast back — it
+    # is tiny by construction (each row represents > chunk_sz reps), so
+    # the common case (every real corpus so far: sf10's max block is 1973
     # reps) pays no window, no sort and no extra exchange of the vector
     # column: every row left-joins to null, lands in chunk 0 of 1 and
-    # flows through the identical round-16 plan shape.  (A first cut used
+    # takes the whole bucket as one group.  (A first cut used
     # row_number over the bucket instead: exact chunk bounds, but the
     # window's exchange+sort of the full reps table measured +8-9 s on
     # the sf10 row — the guard must be free when it does not trigger.)
@@ -995,7 +918,7 @@ def cosine_dup_pairs(
     nn = reps.na.drop(subset=key_names)
     big = (
         nn.groupBy(*key_names)
-        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.count(F.lit(1)).alias("__n"), F.min("rid").alias("__anchor"))
         .filter(F.col("__n") > chunk_sz)
     )
     sub = (
@@ -1026,6 +949,11 @@ def cosine_dup_pairs(
             ),
         )
         .withColumn("__c", F.pmod(F.xxhash64("rid"), F.col("__nch")).cast("int"))
+        # anchor chunk; an unsplit bucket has __nch = 1, so 0 whatever
+        # the null __anchor hashes to
+        .withColumn(
+            "__ca", F.pmod(F.xxhash64("__anchor"), F.col("__nch")).cast("int")
+        )
         .withColumn("__sub", F.explode(sub))
         .select(
             *key_names,
@@ -1033,31 +961,52 @@ def cosine_dup_pairs(
             "v",
             "n2",
             "__c",
+            "__ca",
             F.col("__sub.i").alias("__ci"),
             F.col("__sub.j").alias("__cj"),
         )
-        .repartition(nparts, *key_names, "__ci", "__cj")
+    )
+    if star:
+        cand = cand.filter(
+            (F.col("__ci") == F.col("__ca")) | (F.col("__cj") == F.col("__ca"))
+        )
+    cand = (
+        cand.repartition(nparts, *key_names, "__ci", "__cj")
         .groupBy(*key_names, "__ci", "__cj")
         .applyInPandas(
             _bucket_pairs, "rid_a long, rid_b long, dot double, n2a double, n2b double"
         )
     )
+
+    def scored(pairs: DataFrame, dot: str, n2a: str, n2b: str) -> DataFrame:
+        return pairs.withColumn(
+            "cosine",
+            F.round(F.col(dot) / (F.sqrt(F.col(n2a)) * F.sqrt(F.col(n2b))), 6),
+        ).filter(F.col("cosine") >= threshold)
+
+    cross = scored(cand, "dot", "n2a", "n2b")
+    # intra-group pairs: identical vectors, cosine = n2/(sqrt(n2)*sqrt(n2))
+    # rounded — the same floating-point path the member pair would take
+    intra = scored(reps.filter(F.size("ids") > 1), "n2", "n2", "n2")
+    if star:
+        # rep-level (anchor, member) edges; each exact-duplicate member
+        # links to its group representative (m-1 edges per group)
+        return cross.select(
+            F.col("rid_a").alias("id_a"), F.col("rid_b").alias("id_b"), "cosine"
+        ).unionByName(
+            intra.select(
+                F.col("rid").alias("id_a"), F.explode("ids").alias("id_b"), "cosine"
+            ).filter(F.col("id_a") != F.col("id_b"))
+        )
     idmap = reps.select("rid", "ids")
     cross = (
-        cand.withColumn(
-            "cosine",
-            F.round(
-                F.col("dot") / (F.sqrt(F.col("n2a")) * F.sqrt(F.col("n2b"))), 6
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
         # rebalance before the group-id expansion: candidate pairs leave
         # the pandas stage partitioned by blocking key (quadratic in
         # bucket size, so hot buckets skew), while (rid_a, rid_b) has
         # ~one distinct value per pair and spreads the explode fan-out
         # evenly; project first so the exchange carries only the three
         # columns the expansion needs
-        .select("rid_a", "rid_b", "cosine")
+        cross.select("rid_a", "rid_b", "cosine")
         .repartition(nparts, "rid_a", "rid_b")
         .join(
             idmap.select(F.col("rid").alias("rid_a"), F.col("ids").alias("ids_a")),
@@ -1076,16 +1025,8 @@ def cosine_dup_pairs(
             "cosine",
         )
     )
-    # intra-group pairs: identical vectors, cosine = n2/(sqrt(n2)*sqrt(n2))
-    # rounded — the same floating-point path the member pair would take
     intra = (
-        reps.filter(F.size("ids") > 1)
-        .withColumn(
-            "cosine",
-            F.round(F.col("n2") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("n2"))), 6),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(F.explode("ids").alias("id_a"), F.col("ids").alias("ibs"), "cosine")
+        intra.select(F.explode("ids").alias("id_a"), F.col("ids").alias("ibs"), "cosine")
         .select("id_a", F.explode("ibs").alias("id_b"), "cosine")
         .filter(F.col("id_a") < F.col("id_b"))
     )

@@ -124,9 +124,10 @@ class BitAssembler:
         ``marks`` must be non-decreasing and start at 0 (the whole
         stream is covered; pieces before a later first mark would be
         silently folded into the first output otherwise)."""
-        assert marks and marks[0] == 0 and all(
-            a <= b for a, b in zip(marks, marks[1:])
-        ), "getvalues: marks must start at 0 and be non-decreasing"
+        if not (
+            marks and marks[0] == 0 and all(a <= b for a, b in zip(marks, marks[1:]))
+        ):
+            raise ValueError("getvalues: marks must start at 0 and be non-decreasing")
         packed = (
             pack_bits(np.concatenate(self._vals), np.concatenate(self._lens))[0]
             if self._vals

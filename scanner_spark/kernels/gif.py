@@ -66,6 +66,11 @@ def _lzw_decode(data: bytes, min_code_size: int) -> np.ndarray:
     the code that fills the table, truncation tolerated); the bit
     extraction is one numpy gather over the deterministic post-clear
     width schedule, control codes re-anchor it."""
+    # the GIF spec bounds the code size to 2..8: above 8 the root table
+    # outgrows a byte and the 12-bit width schedule, below 2 it is not a
+    # valid stream
+    if not 2 <= min_code_size <= 8:
+        raise ValueError("GIF LZW min code size out of range")
     clear = 1 << min_code_size
     eoi = clear + 1
     sched = _GIF_SCHEDS.get(min_code_size)

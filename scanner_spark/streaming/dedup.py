@@ -40,8 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from scanner_spark.functions.dedup import DEFAULT_BANDS, DEFAULT_MINHASH_K, DEFAULT_SHINGLE_N, shingles
-from scanner_spark.functions.hashing import MINHASH_P, h60, minhash_coeffs
+from scanner_spark.functions.dedup import DEFAULT_BANDS, DEFAULT_MINHASH_K, DEFAULT_SHINGLE_N
+from scanner_spark.functions.hashing import MINHASH_P, minhash_coeffs
 
 PAIR_SCHEMA = "doc_a long, doc_b long, est_jaccard double"
 # flattened (bucket-sig, doc, sig) parallel arrays for one state shard
@@ -61,11 +61,11 @@ def banded_minhash_rows(
     n: int = DEFAULT_SHINGLE_N,
 ) -> DataFrame:
     """Per-ROW banded MinHash as ONE vectorized Arrow stage: (doc, sig:
-    array<long>, band, bs) rows, bit-identical to the JVM HOF chain
-    (``banded_minhash_rows_hof``, kept below as the reference) and to the
-    batch ``minhash_signatures`` aggregation.
+    array<long>, band, bs) rows whose signatures are bit-identical to the
+    batch ``minhash_signatures`` aggregation.  Docs with no shingles (< n
+    tokens) are dropped, matching the batch contract (no signature row).
 
-    mapInPandas is stateless, so the stage stays streaming-legal upstream
+    mapInArrow is stateless, so the stage stays streaming-legal upstream
     of ``applyInPandasWithState``; the r16 attribution probe
     (``stream_lsh_probe_r16.json``) showed the per-row HOF chain — NOT the
     state stage — was the sf10 row's 26-32 s floor: every shingle paid an
@@ -74,8 +74,9 @@ def banded_minhash_rows(
     minima collapse to one modular affine transform + ``minimum.reduceat``
     over the batch's flat shingle-hash array.
 
-    Bit-exactness ledger (each JVM step and its Python twin; pinned by
-    ``test_banded_rows_arrow_matches_hof`` on the real corpus):
+    Bit-exactness ledger (each JVM step of the batch signature and its
+    Python twin; pinned by ``test_banded_rows_match_batch_signatures`` on
+    the real corpus):
     - ``trim``       -> ``str.strip(" ")`` (Spark trim removes 0x20 only)
     - ``lower``      -> ``str.lower()`` (ASCII-identical; corpus-pinned)
     - ``split \\s+`` -> ``_JAVA_WS.split`` (Java \\s char class, and both
@@ -240,89 +241,6 @@ def banded_minhash_rows(
         F.posexplode(F.array(*[F.col(f"bs{b}") for b in range(bands)])).alias(
             "band", "bs"
         ),
-    )
-
-
-def banded_minhash_rows_hof(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_MINHASH_K,
-    bands: int = DEFAULT_BANDS,
-    n: int = DEFAULT_SHINGLE_N,
-) -> DataFrame:
-    """Per-ROW banded MinHash: (doc, sig: array<long>, band, bs) rows.
-
-    Narrow — shingling, hashing, k permutation minima, and band md5s are
-    all JVM higher-order functions over this row's shingle array, so the
-    transform is streaming-legal (no shuffle, no state) and emits the
-    bit-identical signatures the batch ``minhash_signatures`` aggregation
-    produces.  Docs with no shingles (< n tokens) are dropped, matching
-    the batch contract (no signature row).
-
-    Evaluate-once discipline (the whole cost of this function): a HOF
-    lambda that captures a non-attribute expression re-evaluates it PER
-    ELEMENT — ``slice(split(text), i, n)`` inside transform() is O(tokens²)
-    splits per doc.  So every derived array becomes a real attribute via a
-    1-element explode (a Generate barrier CollapseProject cannot cross;
-    streaming-legal, it's just flatMap) before any lambda touches it:
-    text -> toks barrier -> shingle/hash/fold -> sig barrier -> band md5s.
-    The batch pipeline dodges this differently (posexplode+lead shuffle,
-    dedup.py:_shingled) — a stream upstream of a stateful op cannot."""
-    from scanner_spark.functions.text import tokens
-
-    toksed = df.filter(F.size(tokens(F.col(text_col))) >= n).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array(tokens(F.col(text_col)))).alias("toks"),
-    )
-    sh = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.array_join(F.slice("toks", i + 1, n), " "),
-        )
-    )
-    hm = F.transform(sh, lambda s: h60(s) % F.lit(MINHASH_P))
-    # ONE fold computes all k permutation minima: the md5-per-shingle hash
-    # array is evaluated once as the aggregate's input.  The obvious
-    # k x array_min(transform(...)) spelling re-evaluates that array k
-    # times (projection collapse inlines it into every min) — measured 4x
-    # slower on the bounded replay for k=16.
-    ab = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in minhash_coeffs(k)
-        ]
-    )
-    sig_arr = F.aggregate(
-        hm,
-        F.array_repeat(F.lit(MINHASH_P).cast("long"), k),
-        lambda acc, h: F.zip_with(
-            acc,
-            ab,
-            lambda m, c: F.least(m, (c["a"] * h + c["b"]) % F.lit(MINHASH_P)),
-        ),
-    )
-    # second barrier: `sig` as a real attribute for the band md5s below
-    sig = toksed.select(
-        "doc", F.explode(F.array(sig_arr)).alias("sig")
-    )
-    r = k // bands
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at("sig", i + 1).cast("string")
-                    for i in range(b * r, (b + 1) * r)
-                ],
-            )
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc",
-        "sig",
-        F.posexplode(F.array(*band_cols)).alias("band", "bs"),
     )
 
 

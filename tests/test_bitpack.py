@@ -124,3 +124,16 @@ def test_bit_assembler_one_pack_many_segments_matches_per_segment_pack():
         asm.add_bytes(marker)
         expect.extend(marker)
     assert asm.getvalue() == bytes(expect)
+
+
+@pytest.mark.parametrize(
+    "marks", [[0, 2, 1], [1, 2], []], ids=["unsorted", "not_from_0", "empty"]
+)
+def test_bit_assembler_getvalues_rejects_bad_marks(marks):
+    """Marks that are unsorted or do not start at 0 would silently fold
+    pieces into the wrong output; they fail with a ValueError instead."""
+    asm = BitAssembler()
+    for _ in range(3):
+        asm.add_bytes(b"\xff\xd8")
+    with pytest.raises(ValueError, match="marks must start at 0"):
+        asm.getvalues(marks)

@@ -240,18 +240,27 @@ def test_cosine_star_mode_clique_components_match_brute(spark):
         dedup.cosine_dup_pairs(df, pairs_mode="chain")
 
 
-@pytest.mark.parametrize("split_chunk", [None, 7])
-def test_cosine_all_pairs_bit_identical_to_join_form(spark, split_chunk):
-    """The round-16 per-bucket pair stage (applyInPandas, outer-product
-    accumulation, slack prefilter) must reproduce the retired rep x rep
-    join + pair_dot shape EXACTLY — same pairs, bit-identical cosine
-    doubles — including exact-duplicate group expansion, a pair landing
-    exactly on the threshold, and the null-blocking-key join semantics
-    (null never equals null, so a null label emits no cross pairs).
+@pytest.mark.parametrize(
+    "pairs_mode,split_chunk",
+    [("all", None), ("all", 7), ("star", None), ("star", 7)],
+    ids=["None", "7", "star-None", "star-7"],
+)
+def test_cosine_all_pairs_bit_identical_to_join_form(spark, pairs_mode, split_chunk):
+    """The per-bucket pair kernel (applyInPandas, outer-product
+    accumulation, slack prefilter) must reproduce a literal pairwise
+    replay EXACTLY — same pairs, bit-identical cosine doubles — in both
+    pair modes, including exact-duplicate groups, a pair landing exactly
+    on the threshold, and the null-blocking-key join semantics (null
+    never equals null, so a null label emits no cross pairs).
 
-    ``split_chunk=7`` forces the round-17 mega-bucket triangle split (the
-    81-rep bucket becomes 12 hash chunks -> 78 triangle/rectangle
-    sub-tasks) and must reproduce the identical pair set and bits."""
+    ``pairs_mode="all"`` replays every rep pair of a label and expands
+    exact-duplicate groups to member pairs; ``"star"`` replays only
+    (anchor, rep) pairs, anchor = the label's minimum rep id, and links
+    each duplicate member to its representative.  ``split_chunk=7``
+    forces the mega-bucket triangle split (the 80-rep bucket becomes 12
+    hash chunks -> 78 triangle/rectangle sub-tasks, 12 of them holding
+    the star anchor's chunk; the 21-rep one 3 chunks) and must reproduce
+    the identical pair set and bits."""
     import numpy as np
     import pandas as pd
 
@@ -268,21 +277,28 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, split_chunk):
     rows.append((91, rows[0][1], "a"))
     rows.append((95, rows[50][1], None))  # null label: no cross pairs
     rows.append((96, rows[50][1], None))
+    # second label: split into 3 chunks, its anchor (100) hashes to chunk
+    # 1, so star's rectangle blocks hold the anchor on either side
+    base_b = rng.normal(size=dim)
+    for i in range(100, 121):
+        v = base_b + rng.normal(0, 0.5 if i % 2 else 0.02, dim)
+        rows.append((i, [float(x) for x in v], "b"))
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label string"
     )
     threshold = 0.3
+    star = pairs_mode == "star"
 
     got = {
         (r.id_a, r.id_b): r.cosine
         for r in dedup.cosine_dup_pairs(
-            df, threshold=threshold, split_chunk=split_chunk
+            df, threshold=threshold, pairs_mode=pairs_mode, split_chunk=split_chunk
         ).collect()
     }
 
-    # reference: the retired join-form semantics, replayed literally —
-    # per-pair j-loop dot (sequential scalar adds), JVM round + division
-    # reproduced through a Spark expression on the driver-built pairs
+    # reference: per-pair j-loop dot (sequential scalar adds), JVM round
+    # + division reproduced through a Spark expression on the
+    # driver-built pairs
     pdf = pd.DataFrame(rows, columns=["id", "v", "label"])
     reps = {}
     for _, r in pdf.iterrows():
@@ -295,6 +311,10 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, split_chunk):
         for j in range(dim):
             n2 += a[j] * a[j]
         rep_rows.append((min(ids), sorted(ids), label, list(v), n2))
+    anchor = {}
+    for ra, _, la, _, _ in rep_rows:
+        if la is not None:
+            anchor[la] = min(ra, anchor.get(la, ra))
     pair_rows = []
     for x in range(len(rep_rows)):
         for y in range(len(rep_rows)):
@@ -302,13 +322,16 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, split_chunk):
             rb, ib, lb, vb, n2b = rep_rows[y]
             if la is None or lb is None or la != lb or not ra < rb:
                 continue
+            if star and ra != anchor[la]:
+                continue
             dot = 0.0
             for j in range(dim):
                 dot += va[j] * vb[j]
             pair_rows.append((ra, rb, dot, n2a, n2b, ia, ib))
-    # intra exact-dup pairs: cosine = n2 / (sqrt(n2) * sqrt(n2))
+    # intra exact-dup pairs: cosine = n2 / (sqrt(n2) * sqrt(n2)); star
+    # links each member to the representative (p = 0) only
     for ra, ids, _, _, n2 in rep_rows:
-        for p in range(len(ids)):
+        for p in range(1 if star else len(ids)):
             for q in range(p + 1, len(ids)):
                 pair_rows.append((ids[p], ids[q], n2, n2, n2, None, None))
     ref_df = spark.createDataFrame(
@@ -324,7 +347,7 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, split_chunk):
         if (ra, rb) not in ref_cos:
             continue
         c = ref_cos[(ra, rb)]
-        if ia is None:  # intra pair: already concrete ids
+        if ia is None or star:  # intra pair or star edge: rep-level ids
             expect[(ra, rb)] = c
         else:
             for x in ia:
@@ -336,7 +359,8 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, split_chunk):
     # and the null-label rows produced ONLY their intra exact-dup pair —
     # never a cross pair (null != null under join semantics)
     assert any(a >= 40 or b >= 40 for a, b in got if b < 90)
-    assert (0, 90) in got and (0, 91) in got and (90, 91) in got
+    assert any(a >= 100 for a, b in got)
+    assert (0, 90) in got and (0, 91) in got and ((90, 91) in got) != star
     assert (95, 96) in got
     assert not any(
         (a in (95, 96)) != (b in (95, 96)) for a, b in got

@@ -812,6 +812,23 @@ def test_gif_skips_extensions_and_honors_first_frame():
     assert np.array_equal(decode_gif(spliced), img1)
 
 
+@pytest.mark.parametrize("bad", [0, 1, 9, 11, 255])
+def test_gif_corrupt_min_code_size_rejected(bad):
+    """A corrupt LZW minimum code size byte fails with a deliberate
+    ValueError, not an incidental error inside the decoder."""
+    import numpy as np
+
+    from scanner_spark.kernels.gif import decode_gif, encode_gif
+
+    raw = bytearray(encode_gif(np.full((4, 4, 3), 200, dtype=np.uint8)))
+    # header + 2-entry GCT (13 + 6 bytes), image descriptor (10 bytes)
+    pos = 13 + 2 * 3 + 10
+    assert raw[pos] == 2
+    raw[pos] = bad
+    with pytest.raises(ValueError, match="min code size out of range"):
+        decode_gif(bytes(raw))
+
+
 # ---------------------------------------------------------------------------
 # TIFF codec (kernels/tiff.py)
 # ---------------------------------------------------------------------------

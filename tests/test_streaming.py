@@ -207,6 +207,48 @@ def test_advance_shard_differential_vs_scalar_loop():
             assert [(b, int(d), list(s)) for b, d, s in ent_new] == ent_ref
 
 
+def test_banded_rows_match_batch_signatures(spark, sf_dir):
+    """The Arrow signature stage of the streaming LSH is bit-identical to
+    the batch MinHash on the real corpus: the same docs get a signature,
+    every signature equals ``minhash_signatures``' k permutation minima,
+    and every band signature equals the batch md5 over that band's
+    slice."""
+    from scanner_spark.functions.dedup import (
+        DEFAULT_BANDS,
+        DEFAULT_MINHASH_K,
+        minhash_signatures,
+    )
+    from scanner_spark.io import read_table
+    from scanner_spark.streaming.dedup import banded_minhash_rows
+
+    k, r = DEFAULT_MINHASH_K, DEFAULT_MINHASH_K // DEFAULT_BANDS
+    docs = read_table(spark, sf_dir, "documents")
+    batch = minhash_signatures(docs).select(
+        "doc",
+        F.array(*[F.col(f"m{i}") for i in range(k)]).alias("sig"),
+        F.posexplode(
+            F.array(
+                *[
+                    F.md5(
+                        F.concat_ws(
+                            ",",
+                            *[F.col(f"m{i}").cast("string") for i in range(b * r, (b + 1) * r)],
+                        )
+                    )
+                    for b in range(DEFAULT_BANDS)
+                ]
+            )
+        ).alias("band", "bs"),
+    )
+    want = {(x.doc, x.band): (tuple(x.sig), x.bs) for x in batch.collect()}
+    got = {
+        (x.doc, x.band): (tuple(x.sig), x.bs)
+        for x in banded_minhash_rows(docs).collect()
+    }
+    assert len(want) > 100
+    assert got == want
+
+
 def test_lsh_dedup_bounded_state_on_unbounded_stream(spark, tmp_path):
     """Integration: lsh_dedup_pairs with ProcessingTimeTimeout + a FIFO
     doc cap keeps the state-store row count at the fixed group cardinality
