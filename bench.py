@@ -88,7 +88,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        "env": _fingerprint(sf_dir),
+        "env": _fingerprint(sf_dir, spark.sparkContext.defaultParallelism),
     }
     if failures:
         full["failures"] = failures
@@ -104,12 +104,14 @@ def main() -> None:
     spark.stop()
 
 
-def _fingerprint(sf_dir: str) -> dict:
+def _fingerprint(sf_dir: str, parallelism: int) -> dict:
     """Machine/testdata fingerprint so cross-round BENCH comparisons can be
     normalized: testdata regeneration (mtime/rows drift) and machine speed
     (cpu count + a ~1 s single-thread calibration loop) both shift absolute
     times without any code change — round 4's recorded 'regression' was
-    exactly this (VERDICT r04, Performance)."""
+    exactly this (VERDICT r04, Performance).  ``parallelism`` is the
+    session's defaultParallelism, the core count the run actually used;
+    ``cpus`` is only what the host has."""
     import glob
     import hashlib
 
@@ -132,6 +134,7 @@ def _fingerprint(sf_dir: str) -> dict:
         n += 1
     return {
         "cpus": os.cpu_count(),
+        "parallelism": parallelism,
         "calib_sha256_per_sec": n,
         "testdata": tables,
     }

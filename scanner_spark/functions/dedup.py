@@ -500,11 +500,9 @@ def simhash_pairs_from_sigs(
     )
 
 
-# Edge count below which the CC remainder is finished on the driver.
-# 500k (node, node) longs is ~8 MB collected — bounded regardless of input
-# size, because contraction rounds shrink the live edge set geometrically
-# before this path is taken.  Same design as GraphFrames' ConnectedComponents
-# broadcast-threshold local finish.
+# Edge count at or below which connected components finish on the driver:
+# 500k (node, node) longs is ~8 MB collected.  Neither star step adds
+# edges, so the count only falls from round to round.
 LOCAL_CC_MAX_EDGES = 500_000
 
 
@@ -536,129 +534,108 @@ def _local_components(edges) -> dict:
     return {n: find(n) for n in parent}
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 20,
-    local_max_edges: int = LOCAL_CC_MAX_EDGES,
-) -> DataFrame:
-    """Connected components over a near-duplicate pair graph: each node is
-    labeled with the MINIMUM node id reachable from it — the canonical
-    cluster id for keep-one-per-cluster dedup.
+def _is_star_forest(g: DataFrame) -> bool:
+    """True when the oriented edge list (u > v) is a set of stars, each
+    centred on its minimum: every node with an out-edge has no other
+    edge.  Then each edge is (leaf, component) and each centre is its
+    own component."""
+    ends = g.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("n"), F.lit(1).alias("out")),
+                F.struct(F.col("v").alias("n"), F.lit(0).alias("out")),
+            )
+        ).alias("e")
+    ).select("e.*")
+    per_node = ends.groupBy("n").agg(
+        F.sum("out").alias("outs"), F.count(F.lit(1)).alias("deg")
+    )
+    return per_node.filter((F.col("outs") > 0) & (F.col("deg") > 1)).isEmpty()
 
-    Two-tier execution, both exact:
 
-    - **Distributed min-label edge contraction** (the MapReduce CC
-      algorithm) while the live edge set is large: each round every node
-      merges into least(self, min neighbor) and the graph is rewritten
-      through those labels — path lengths at least halve per round, so
-      O(log diameter) rounds, each one shuffle of the shrinking edge list
-      (plain label propagation needs diameter rounds and was measured not
-      converging in 20 on threshold-0.3 similarity graphs).
-    - **Driver union-find finish** once the (contracted) edge list fits
-      under ``local_max_edges``: contraction shrinks the graph
-      geometrically, so the remainder is tiny; collecting ~8 MB and
-      finishing locally replaces O(log d) further multi-stage rounds with
-      one job.  Near-dup pair graphs at suite scale take this path
-      immediately — the edge list is already a small fraction of the
-      corpus.
+def _star_round(g: DataFrame) -> DataFrame:
+    """One large-star then one small-star step (Kiveris et al., SoCC 2014)
+    over an oriented edge list (u > v).  Each step is a per-node minimum
+    over a window, so the round has no join.  The round drops no node and
+    adds no edge, and its output is oriented and distinct again."""
+    from pyspark.sql import Window
 
-    Output: (doc, component).
+    w = Window.partitionBy("u")
+    # large star: each neighbour above u re-attaches to the minimum of
+    # u's closed neighbourhood
+    both = g.unionByName(g.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    large = (
+        both.withColumn("m", F.least(F.col("u"), F.min("v").over(w)))
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    )
+    # small star: u and each neighbour below it attach to the least of them
+    small = large.withColumn("m", F.min("v").over(w)).select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u"), F.col("m").alias("v")),
+                F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+            )
+        ).alias("e")
+    )
+    return small.select("e.*").filter(F.col("u") != F.col("v")).distinct()
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over a near-duplicate pair graph
+    ``(doc_a, doc_b)``: each node is labeled with the MINIMUM node id
+    reachable from it, the canonical cluster id for keep-one-per-cluster
+    dedup.  Output: (doc, component).
+
+    Eager: the edge list is computed, counted and resolved before this
+    returns.  One loop runs over one edge list, oriented (larger,
+    smaller).  Each pass counts the edges and then:
+
+    - at or under ``LOCAL_CC_MAX_EDGES``, collects them and finishes with
+      a driver union-find.  Near-dup pair lists at suite scale take this
+      exit on the first pass: the pair pipeline runs once (persist, count,
+      collect).
+    - if the edges already form stars centred on their minima, returns
+      them as the labels, with no further job.
+    - otherwise runs one large-star/small-star round and checkpoints it.
+      Rounds keep every node and never add edges; they reach the star
+      form in O(log^2 n) rounds, so there is no iteration cap.
     """
-    spark = pairs.sparkSession
-    node_type = pairs.schema[a_col].dataType.simpleString()
-    # cache the pair pipeline: near-dup pair generation (LSH joins / UDF
-    # cosine) is the expensive part — the count below materializes it once
-    # and every later read hits the cache
-    edges0 = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    g = (
+        pairs.select(
+            F.greatest("doc_a", "doc_b").alias("u"),
+            F.least("doc_a", "doc_b").alias("v"),
+        )
         .filter(F.col("u") != F.col("v"))
+        # the pair pipeline (LSH joins / UDF cosine) is the expensive
+        # part: the first count materializes it once for every later read
         .persist()
     )
-    if edges0.count() <= local_max_edges:
-        # common case for near-dup graphs: the pair list is already a
-        # small fraction of the corpus — one collect, zero extra rounds
-        mapping = _local_components([(r["u"], r["v"]) for r in edges0.collect()])
-        edges0.unpersist()
-        return spark.createDataFrame(
-            list(mapping.items()), f"doc {node_type}, component {node_type}"
-        )
-    g = (
-        edges0.unionByName(edges0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges0.unpersist()
-    comp = g.select(F.col("u").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # one cheap count on the checkpointed edge list serves both the
-        # emptiness test and the local-finish decision
-        n_edges = g.count()
-        if n_edges == 0:
-            break
-        if n_edges <= local_max_edges:
-            # finish locally: relabel through the union-find of the
-            # remaining contracted edges.  comp.label is the contraction
-            # so far; the local pass maps each surviving label to its
-            # final minimum.
-            mapping = _local_components(
-                [(r["u"], r["v"]) for r in g.collect()]
+    while True:
+        if g.count() <= LOCAL_CC_MAX_EDGES:
+            mapping = _local_components(g.collect())
+            g.unpersist()
+            node_type = g.schema["u"].dataType.simpleString()
+            return g.sparkSession.createDataFrame(
+                list(mapping.items()), f"doc {node_type}, component {node_type}"
             )
-            mdf = spark.createDataFrame(
-                list(mapping.items()), f"node {node_type}, newlab {node_type}"
+        if _is_star_forest(g):
+            # before any round this reads the persisted pairs, which stay
+            # cached for the lazy result
+            centres = g.select(F.col("v").alias("u")).distinct()
+            return g.unionByName(centres.withColumn("v", F.col("u"))).select(
+                F.col("u").alias("doc"), F.col("v").alias("component")
             )
-            comp = comp.join(
-                F.broadcast(mdf), comp.label == mdf.node, "left"
-            ).select(
-                comp.node.alias("node"),
-                F.coalesce(F.col("newlab"), comp.label).alias("label"),
-            )
-            break
-        # distributed contraction round.  lab is checkpointed once so the
-        # groupBy shuffle runs once, not three times (comp join + both
-        # edge-rewrite joins read it).
-        lab = (
-            g.groupBy("u")
-            .agg(F.min("v").alias("m"))
-            .select(
-                F.col("u").alias("node"),
-                F.least(F.col("u"), F.col("m")).alias("newlab"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        comp = (
-            comp.join(lab, comp.label == lab.node, "left")
-            .select(
-                comp.node.alias("node"),
-                F.coalesce(F.col("newlab"), comp.label).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        lu = lab.select(F.col("node").alias("u"), F.col("newlab").alias("nu"))
-        lv = lab.select(F.col("node").alias("v"), F.col("newlab").alias("nv"))
-        g = (
-            g.join(lu, "u")
-            .join(lv, "v")
-            .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    return comp.select(F.col("node").alias("doc"), F.col("label").alias("component"))
+        nxt = _star_round(g).localCheckpoint(eager=True)
+        g.unpersist()
+        g = nxt
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Cluster summary for keep-one-per-cluster dedup: (component,
     n_members, keep_id) where keep_id = the cluster's minimum doc id (==
     component by construction)."""
-    cc = connected_components(pairs, a_col, b_col)
+    cc = connected_components(pairs)
     return cc.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("doc").alias("keep_id"),

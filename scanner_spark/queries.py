@@ -1076,9 +1076,10 @@ def q_dedup_simhash_sigs(spark, sf_dir):
 
 def q_dedup_minhash_clusters(spark, sf_dir):
     """MinHash pairs -> connected components -> cluster summary: the
-    keep-one-per-cluster step of a real dedup pipeline.  CC runs as
-    label-propagation DataFrame joins (diameter-bounded rounds, one edge
-    shuffle each); the oracle replays it with a recursive CTE."""
+    keep-one-per-cluster step of a real dedup pipeline.  CC is eager: a
+    driver union-find under ``dedup.LOCAL_CC_MAX_EDGES`` edges, join-free
+    large-star/small-star rounds above it; the oracle replays it with a
+    recursive CTE."""
     d = read_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(d, threshold=MINHASH_THRESHOLD)
     return dedup.dedup_clusters(pairs)

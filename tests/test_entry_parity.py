@@ -104,6 +104,20 @@ def test_parity_stock_session(name, stock_spark, ddb):
     _assert_parity(name, stock_spark, ddb)
 
 
+@pytest.mark.parametrize(
+    "name", ["dedup_keep_best", "dedup_minhash_clusters", "emb_dup_clusters"]
+)
+def test_parity_cc_distributed(name, spark, ddb, monkeypatch):
+    """Scale-gate row: with the driver-finish gate at 0, connected
+    components resolve through the distributed star rounds, which the
+    parity SFs never reach on their own; the clusters must still
+    hash-match the oracle."""
+    from scanner_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
+    _assert_parity(name, spark, ddb)
+
+
 def test_kmeans_centroids_agree_across_engines(spark, ddb):
     """Early-warning for the kmeans determinism contract (ADVICE r04):
     parity of the integer OUTPUTS rests on round(…, 6) collapsing float

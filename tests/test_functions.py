@@ -672,39 +672,52 @@ def test_connected_components_basic(spark):
     assert clusters == {1: (4, 1), 5: (2, 5)}
 
 
-def test_connected_components_long_chain_converges(spark):
-    n = 12  # diameter > default few rounds; must still converge
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
-    )
+CC_GRAPHS = {
+    "chain12": [(i, i + 1) for i in range(12)],
+    # ids in sorted order: a min-label contraction loop removes one edge
+    # per round here
+    "chain64_sorted": [(i, i + 1) for i in range(64)],
+    "chain64_reversed": [(i + 1, i) for i in reversed(range(64))],
+    "star_max_centre": [(99, i) for i in range(40)],
+}
+
+
+@pytest.mark.parametrize("gate", [None, 0], ids=["default", "gate0"])
+@pytest.mark.parametrize("graph", sorted(CC_GRAPHS))
+def test_connected_components_long_chain_converges(spark, monkeypatch, graph, gate):
+    # every shape must resolve to one component labelled with its minimum
+    # id, whether the driver finish or the distributed rounds take it
+    if gate is not None:
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", gate)
+    edges = CC_GRAPHS[graph]
+    nodes = {n for e in edges for n in e}
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     cc = dedup.connected_components(pairs).collect()
-    assert {r.component for r in cc} == {0}
-    assert len(cc) == n + 1
+    assert {r.component for r in cc} == {min(nodes)}
+    assert sorted(r.doc for r in cc) == sorted(nodes)
 
 
-def test_connected_components_paths_agree(spark):
-    # the distributed contraction path (local_max_edges=0) and the driver
-    # union-find finish (default) must produce identical labelings on a
-    # graph with chains, a clique, and disjoint pieces
+def test_connected_components_paths_agree(spark, monkeypatch):
+    # the distributed rounds alone (gate 0 or 6: below the 13 edges of the
+    # converged stars), rounds then the driver finish (gate 13 = nodes -
+    # components, which the rounds reach) and the driver union-find alone
+    # (default) must produce identical labelings on a graph with chains, a
+    # clique, and disjoint pieces
     edges = (
         [(i, i + 1) for i in range(10, 18)]        # chain
         + [(a, b) for a in range(30, 34) for b in range(a + 1, 34)]  # clique
         + [(50, 99), (99, 42)]
     )
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    local = sorted(
-        map(tuple, dedup.connected_components(pairs).collect())
-    )
-    distributed = sorted(
-        map(tuple, dedup.connected_components(pairs, local_max_edges=0).collect())
-    )
-    assert local == distributed
-    # hybrid: contraction rounds shrink the chain below the threshold,
-    # then the driver union-find finishes the remainder
-    hybrid = sorted(
-        map(tuple, dedup.connected_components(pairs, local_max_edges=6).collect())
-    )
-    assert local == hybrid
+
+    def labels(gate):
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", gate)
+        return sorted(map(tuple, dedup.connected_components(pairs).collect()))
+
+    local = labels(dedup.LOCAL_CC_MAX_EDGES)
+    assert labels(0) == local
+    assert labels(6) == local
+    assert labels(13) == local
     comp = dict(local)
     assert comp[17] == 10 and comp[33] == 30 and comp[99] == 42 and comp[50] == 42
 
