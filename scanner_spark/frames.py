@@ -15,7 +15,6 @@ import numpy as np
 # Scanner FrameType -> numpy dtype (metadata.proto:49-54, frame.h:26-29)
 DTYPES = {"u8": np.uint8, "u16": np.uint16, "f32": np.float32, "f64": np.float64}
 
-FRAME_META_COLS = ["height", "width", "channels", "dtype"]
 FRAME_SCHEMA = (
     "frame binary, height int, width int, channels int, dtype string"
 )

@@ -52,48 +52,6 @@ COSINE_SPLIT_CHUNK = 8192
 DEFAULT_MAX_SHINGLE_DF = 1000
 
 
-def shingles(col, n: int = DEFAULT_SHINGLE_N):
-    """Distinct word n-gram shingles as an array column (JVM-side).
-
-    Docs shorter than ``n`` tokens produce an EMPTY array — the same
-    contract as ``_shingled()`` and the DuckDB oracles (which drop
-    sub-n docs via ``shingle IS NOT NULL``), so the two helpers are
-    interchangeable."""
-    toks = tokens(col)
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-duplicate groups: content hash -> canonical (min) id + count.
-    Returns only groups with >1 member."""
-    return (
-        df.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
-        .filter(F.col("n_dups") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row (min id) per distinct content hash."""
-    w = df.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("content_hash")
-    )
-    keep = w.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
-    return df.join(keep, id_col, "left_semi")
-
-
 def _text_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact-duplicate collapse for the text pair operators: one
     representative row per distinct text — (doc = min id, text, __ids =

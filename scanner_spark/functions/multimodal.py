@@ -170,10 +170,6 @@ def text_to_png(df: DataFrame, text_col: str = "text", h: int = 32, w: int = 32,
     bytes tile the pixel grid).  Arrow-batched mapInPandas."""
     from scanner_spark.kernels.image import encode_png
 
-    out_schema = (
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>"
-    )
     need = h * w * 3
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -196,166 +192,7 @@ def text_to_png(df: DataFrame, text_col: str = "text", h: int = 32, w: int = 32,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
-def text_to_gif(df: DataFrame, text_col: str = "text", h: int = 32, w: int = 32,
-                id_col: str = "doc_id") -> DataFrame:
-    """Render each document's utf-8 bytes into a deterministic GREYSCALE
-    (h, w, 3) image (grey because GIF is palettized: byte-per-pixel grey
-    keeps the palette ≤256 so the in-repo LZW encode is pixel-exact) and
-    REAL-encode it as GIF89a — the third genuine compressed image format
-    from driver-provided data.  Arrow-batched mapInPandas."""
-    from scanner_spark.kernels.gif import encode_gif
-
-    out_schema = (
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>"
-    )
-    need = h * w
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for s in pdf[text_col]:
-                raw = (s or " ").encode("utf-8")
-                reps = -(-need // len(raw))  # ceil-div tile
-                grey = np.frombuffer((raw * reps)[:need], dtype=np.uint8)
-                img = np.repeat(grey.reshape(h, w, 1), 3, axis=2)
-                payloads.append(encode_gif(img))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"width": w, "height": h, "duration_ms": 0, "codec": "gif"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
-def text_to_webp(df: DataFrame, text_col: str = "text", h: int = 32, w: int = 32,
-                 id_col: str = "doc_id") -> DataFrame:
-    """Render each document's utf-8 bytes into a deterministic (h, w, 3)
-    image and REAL-encode it as lossless WebP (VP8L, in-repo encoder) —
-    the fourth genuine compressed image format from driver-provided data
-    (pixel-exact round trip, like PNG/GIF).  Arrow-batched mapInPandas."""
-    from scanner_spark.kernels.webp import encode_webp
-
-    out_schema = (
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>"
-    )
-    need = h * w * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for s in pdf[text_col]:
-                raw = (s or " ").encode("utf-8")
-                reps = -(-need // len(raw))  # ceil-div tile
-                arr = np.frombuffer((raw * reps)[:need], dtype=np.uint8)
-                payloads.append(encode_webp(arr.reshape(h, w, 3)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"width": w, "height": h, "duration_ms": 0, "codec": "webp"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
-def text_to_jpeg(df: DataFrame, text_col: str = "text", h: int = 32, w: int = 32,
-                 id_col: str = "doc_id", quality: int = 85,
-                 progressive: bool = False) -> DataFrame:
-    """Render each document's utf-8 bytes into a deterministic (h, w, 3)
-    image and REAL-encode it as JPEG (in-repo T.81 encoder) — genuine
-    lossy-compressed payloads from driver-provided data, the JPEG twin of
-    ``text_to_png``.  ``progressive=True`` emits SOF2 successive-
-    approximation streams (same pixels on decode as the baseline
-    encoding).  Arrow-batched mapInPandas."""
-    from scanner_spark.kernels.jpeg import encode_jpeg, encode_jpeg_progressive
-
-    enc = encode_jpeg_progressive if progressive else encode_jpeg
-    out_schema = (
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>"
-    )
-    need = h * w * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for s in pdf[text_col]:
-                raw = (s or " ").encode("utf-8")
-                reps = -(-need // len(raw))
-                arr = np.frombuffer((raw * reps)[:need], dtype=np.uint8)
-                payloads.append(enc(arr.reshape(h, w, 3), quality=quality))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"width": w, "height": h, "duration_ms": 0, "codec": "jpeg"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
-def text_to_tiff(df: DataFrame, text_col: str = "text", h: int = 32, w: int = 32,
-                 id_col: str = "doc_id", compression: str = "lzw",
-                 predictor: int = 2) -> DataFrame:
-    """Render each document's utf-8 bytes into a deterministic (h, w, 3)
-    image and REAL-encode it as TIFF (in-repo TIFF 6.0 codec; defaults
-    exercise the LZW + horizontal-predictor path) — the fifth genuine
-    compressed image format, pixel-exact like PNG/GIF/WebP.  Arrow-batched
-    mapInPandas."""
-    from scanner_spark.kernels.tiff import encode_tiff
-
-    out_schema = (
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>"
-    )
-    need = h * w * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for s in pdf[text_col]:
-                raw = (s or " ").encode("utf-8")
-                reps = -(-need // len(raw))
-                arr = np.frombuffer((raw * reps)[:need], dtype=np.uint8)
-                payloads.append(
-                    encode_tiff(arr.reshape(h, w, 3), compression=compression,
-                                predictor=predictor)
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"width": w, "height": h, "duration_ms": 0, "codec": "tiff"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    return df.select(id_col, text_col).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 def text_to_media(df: DataFrame, text_col: str = "text", h: int = 32,
@@ -363,13 +200,14 @@ def text_to_media(df: DataFrame, text_col: str = "text", h: int = 32,
                   quality: int = 85) -> DataFrame:
     """ONE-PASS six-format image encode: per row, ``id % 6`` selects
     PNG (0) / baseline JPEG (1) / GIF (2) / lossless WebP-VP8L (3) /
-    LZW+predictor TIFF (4) / progressive JPEG (5) — byte-identical
-    payloads to the six per-format helpers above, but a SINGLE
-    documents scan and a single Arrow stage instead of six
-    filter+encode branches union'd over the same parquet (round 14,
-    VERDICT r13 finding #2: multimodal_decode was the #1 suite cost).
-    At 100 TB this is the difference between one pass over the corpus
-    and six."""
+    LZW+predictor TIFF (4) / progressive JPEG (5).  Each document's
+    utf-8 bytes tile the pixel grid as in ``text_to_png``; GIF rows are
+    GREYSCALE (byte-per-pixel grey keeps the palette within 256 entries,
+    so the LZW encode is pixel-exact).  A SINGLE documents scan and a
+    single Arrow stage instead of six filter+encode branches union'd
+    over the same parquet (round 14, VERDICT r13 finding #2:
+    multimodal_decode was the #1 suite cost).  At 100 TB this is the
+    difference between one pass over the corpus and six."""
     from scanner_spark.kernels.gif import encode_gif
     from scanner_spark.kernels.image import encode_png
     from scanner_spark.kernels.jpeg import (
@@ -379,10 +217,6 @@ def text_to_media(df: DataFrame, text_col: str = "text", h: int = 32,
     from scanner_spark.kernels.tiff import encode_tiff
     from scanner_spark.kernels.webp import encode_webp
 
-    out_schema = (
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>"
-    )
     need3, need1 = h * w * 3, h * w
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -455,7 +289,7 @@ def text_to_media(df: DataFrame, text_col: str = "text", h: int = 32,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    return df.select(id_col, text_col).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 AUDIO_SAMPLE_RATE = 8000
@@ -559,26 +393,6 @@ def audio_feature_table(df: DataFrame) -> DataFrame:
     return df.select("asset_id", "payload").mapInPandas(run, schema=out_schema)
 
 
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """payload binary -> feature vector (array<float>).
-
-    DETERMINISTIC FAKE featurizer (md5-seeded); the mapInPandas batch
-    contract matches what a real CLIP/CNN embedding job needs.
-    """
-    out_schema = "asset_id long, features array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                seed = int.from_bytes(hashlib.md5(payload or b"").digest()[:4], "big")
-                rng = np.random.default_rng(seed)
-                feats.append(rng.random(dim).astype("float32").tolist())
-            yield pd.DataFrame({"asset_id": pdf["asset_id"], "features": feats})
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def sample_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """video payload -> sampled frame rows (one output row per sampled
     timestamp — a 1:N mapInPandas, the cardinality shape video decode
@@ -605,34 +419,3 @@ def sample_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def synthetic_media(spark, n: int = 8) -> DataFrame:
-    """Deterministic media table for tests: image rows carry REAL PNG
-    payloads (in-repo encoder), video/audio rows opaque seeded bytes."""
-    from scanner_spark.kernels.image import encode_png
-
-    rows = []
-    for i in range(n):
-        kind = ["image", "video", "audio"][i % 3]
-        if kind == "image":
-            raw = hashlib.sha256(str(i).encode()).digest() * (64 * 48 * 3 // 32)
-            payload = encode_png(
-                np.frombuffer(raw, dtype=np.uint8).reshape(48, 64, 3)
-            )
-        else:
-            payload = hashlib.sha256(str(i).encode()).digest() * 8
-        rows.append(
-            {
-                "asset_id": i,
-                "media_type": kind,
-                "payload": payload,
-                "meta": {
-                    "width": 64,
-                    "height": 48,
-                    "duration_ms": 3500 + 500 * i,
-                    "codec": "png" if kind == "image" else "fake",
-                },
-            }
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -41,7 +41,7 @@ benchmark query keeps the unguarded chain.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # Patterns in the Java-regex ∩ RE2 common subset.  Kept deliberately
 # simple and auditable — production scrubbing tunes recall/precision per
@@ -90,19 +90,6 @@ def pii_scrub(col: Column, guard: bool = False) -> Column:
         any_pii = "|".join(f"(?:{p})" for _n, p, _r in PII_CLASSES)
         return F.when(col.rlike(any_pii), out).otherwise(col)
     return out
-
-
-def pii_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-row PII counts + scrubbed text.
-
-    Adds one ``n_<class>`` column per detector and ``scrubbed``; all
-    expressions fuse into a single projection over the scan (verify with
-    ``.explain``: one WholeStageCodegen span, PushedFilters untouched)."""
-    c = F.col(text_col)
-    out = df
-    for name, pat, _repl in PII_CLASSES:
-        out = out.withColumn(f"n_{name}", pii_count(c, pat))
-    return out.withColumn("scrubbed", pii_scrub(c))
 
 
 def oracle_scrub_sql(col_sql: str) -> str:

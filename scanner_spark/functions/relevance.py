@@ -138,25 +138,6 @@ def search_topk(
     )
 
 
-def word_bigrams(toks: Column) -> Column:
-    """Adjacent word pairs ``"a b"`` from a tokens-array column (empty
-    when fewer than 2 tokens).
-
-    ``toks`` must be a real ATTRIBUTE (not an inline ``split()``
-    expression): each ``slice`` then evaluates the tokenizer once per row.
-    The previous spelling — a ``transform`` whose lambda captured the
-    token expression via ``element_at`` — let CollapseProject inline the
-    tokenizer PER ELEMENT, O(tokens²) splits per doc (the evaluate-once
-    trap ``streaming/dedup.banded_minhash_rows`` documents; fixing it here
-    took the sf0.1 query from 4.2 s to 1.7 s)."""
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(toks, F.lit(1), n1),
-        F.slice(toks, F.lit(2), n1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-
-
 def bigram_familiarity(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -199,7 +180,8 @@ def bigram_familiarity(
     passes at scale); no persist is needed because the relation is
     consumed once.  The hashed array crosses a 1-element-explode
     Generate barrier so the two slices see an ATTRIBUTE (the
-    evaluate-once trap ``word_bigrams`` documents)."""
+    evaluate-once trap ``streaming.dedup.banded_minhash_rows``
+    documents)."""
     from scanner_spark.functions.hashing import h60
 
     hashed = df.select(

@@ -122,23 +122,6 @@ def knn_lsh(
     return knn_brute(cand, query, k, vec_col, id_col)
 
 
-def assign_cells(vec_col, centroids: list[list[float]]):
-    """Nearest-centroid id (L2) per vector: one Arrow batch does a
-    (batch x dim) @ (dim x nlist) matmul against the broadcast centroid
-    matrix.  ||v - c||^2 = ||v||^2 - 2 v.c + ||c||^2; ||v||^2 is constant
-    per row, so argmin over (||c||^2 - 2 v.c) suffices."""
-    C = np.asarray(centroids, dtype="float64")  # (nlist, dim)
-    c_sq = (C * C).sum(axis=1)  # (nlist,)
-
-    @F.pandas_udf("int")
-    def cell(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype("float64")  # (batch, dim)
-        scores = c_sq[None, :] - 2.0 * (m @ C.T)  # (batch, nlist)
-        return pd.Series(np.argmin(scores, axis=1).astype("int32"))
-
-    return cell(vec_col)
-
-
 def _cell_expr(vec_col, centroids: list[list[float]]):
     """Nearest-centroid id as a JVM expression: lexicographic struct min
     over (sequential-fold sqdist, cid) — bit-reproducible by any engine
@@ -172,9 +155,7 @@ def ivf_index(
     each Lloyd iteration recomputes means via one groupBy on (cell, dim)
     ROUNDED to 6 decimals — so a SQL twin unrolling the same iterations
     hash-matches bit for bit.  Only nlist x dim floats ever reach the
-    driver.  (``assign_cells``' matmul UDF remains the thousands-of-cells
-    path where a literal struct array would bloat the plan.)  Returns
-    (df + ``cell`` column, centroids)."""
+    driver.  Returns (df + ``cell`` column, centroids)."""
     seeds = (
         df.orderBy(id_col)
         .limit(nlist)
@@ -355,19 +336,6 @@ def knn_ivf(
     return knn_brute(cand, query, k, vec_col, id_col)
 
 
-def partition_by_bucket(
-    df: DataFrame, bits: int = 8, vec_col: str = "embedding"
-) -> DataFrame:
-    """Materialization helper for the scale path: add the LSH bucket and
-    repartition on it, so writing parquet partitioned by ``bucket`` gives
-    probes partition pruning (the scan touches only probed buckets)."""
-    dim = int(df.select(F.size(vec_col).alias("d")).first()["d"])
-    planes = hyperplanes(dim, bits)
-    return df.withColumn("bucket", lsh_bucket(F.col(vec_col), planes)).repartition(
-        "bucket"
-    )
-
-
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -389,7 +357,8 @@ def quantize_embeddings(
     capturing the raw ``array_max(...)/levels`` expression lets
     CollapseProject inline the whole max scan PER ELEMENT, O(dim²) per row
     (measured 13.7 s -> 1.4 s at sf3; same trap as
-    ``relevance.word_bigrams`` and ``streaming.dedup.banded_minhash_rows``)."""
+    ``relevance.bigram_familiarity`` and
+    ``streaming.dedup.banded_minhash_rows``)."""
     levels = float((1 << (bits - 1)) - 1)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))

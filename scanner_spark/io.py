@@ -94,6 +94,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.repartition(target)
     return df
 
-
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}

@@ -24,8 +24,6 @@ import struct
 
 import numpy as np
 
-WAV_MAGIC = b"RIFF"
-
 
 # ---------------------------------------------------------------------------
 # codec

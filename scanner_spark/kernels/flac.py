@@ -31,16 +31,6 @@ import numpy as np
 
 FLAC_MAGIC = b"fLaC"
 
-# fixed predictor coefficients: residual_o = delta^o(signal) (spec §9.2.2)
-_FIXED_COEFFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-
 def _make_crc_table(poly: int, width: int) -> list[int]:
     mask = (1 << width) - 1
     top = 1 << (width - 1)
@@ -531,6 +521,8 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
     arr = np.stack(
         [np.concatenate(c) if c else np.zeros(0, dtype=np.int64) for c in chans]
     ).T
+    if total and len(arr) < total:  # a stream cut at a frame boundary
+        raise ValueError(f"FLAC truncated: {len(arr)} of {total} samples")
     if total and len(arr) > total:
         arr = arr[:total]
     return arr.astype(np.int32), rate

@@ -116,7 +116,9 @@ def _lzw_decode(data: bytes, min_code_size: int) -> np.ndarray:
             for code in codes[:stop].tolist():
                 if prev is None:
                     if code >= clear:
-                        raise KeyError(code)  # first code must be a literal
+                        raise ValueError(
+                            f"corrupt LZW stream: first code {code} is not a literal"
+                        )
                     entry = table[code]
                 elif code < L:
                     entry = table[code]
@@ -228,6 +230,8 @@ def decode_gif(data: bytes) -> np.ndarray:
     """GIF bytes -> (H, W, 3) uint8 RGB of the first image."""
     if data[:6] not in GIF_MAGICS:
         raise ValueError("not a GIF payload")
+    if len(data) < 13:
+        raise ValueError("GIF truncated: incomplete logical screen descriptor")
     sw, sh, flags, bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
     pos = 13
     gct = None
@@ -247,6 +251,8 @@ def decode_gif(data: bytes) -> np.ndarray:
             if label == 0xF9 and len(blocks) >= 4 and (blocks[0] & 0x01):
                 transparent = blocks[3]
         elif b == 0x2C:  # image descriptor
+            if pos + 10 > len(data):
+                raise ValueError("GIF truncated: incomplete image descriptor")
             x0, y0, w, h, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
             pos += 10
             ct = gct
@@ -258,15 +264,17 @@ def decode_gif(data: bytes) -> np.ndarray:
                 pos += 3 * n
             if ct is None:
                 raise ValueError("GIF image has no color table")
+            if pos >= len(data):
+                raise ValueError("GIF truncated: no image data")
             min_code_size = data[pos]
             pos += 1
             lzw, pos = _read_blocks(data, pos)
             idx = np.asarray(
                 _lzw_decode(lzw, min_code_size), dtype=np.int64
             )
-            if idx.size < w * h:  # truncated image: pad with 0
-                idx = np.concatenate(
-                    [idx, np.zeros(w * h - idx.size, dtype=np.int64)]
+            if idx.size < w * h:
+                raise ValueError(
+                    f"GIF image data ends early: {idx.size} of {w * h} pixels"
                 )
             idx = idx[: w * h].reshape(h, w)
             if iflags & 0x40:  # interlaced: rows arrive in 4 passes

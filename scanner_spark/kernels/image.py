@@ -466,6 +466,8 @@ def decode_png(data: bytes) -> np.ndarray:
         (length,) = struct.unpack(">I", data[pos : pos + 4])
         tag = data[pos + 4 : pos + 8]
         chunk = data[pos + 8 : pos + 8 + length]
+        if len(chunk) != length:
+            raise ValueError(f"PNG truncated inside a {tag!r} chunk")
         pos += 12 + length  # length + tag + payload + crc
         if tag == b"IHDR":
             ihdr = struct.unpack(">IIBBBBB", chunk)
@@ -484,7 +486,10 @@ def decode_png(data: bytes) -> np.ndarray:
     if channels is None:  # 3 = palette
         raise ValueError(f"unsupported color type {color_type}")
     sb = depth // 8  # bytes per sample; 16-bit samples are big-endian
-    raw = zlib.decompress(b"".join(idat))
+    try:
+        raw = zlib.decompress(b"".join(idat))
+    except zlib.error as exc:
+        raise ValueError(f"PNG image data is truncated or corrupt: {exc}") from exc
 
     def to_samples(bytes2d: np.ndarray, ph: int, pw: int) -> np.ndarray:
         if sb == 1:

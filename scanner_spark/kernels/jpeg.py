@@ -50,7 +50,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 ZIGZAG = _zigzag_order()  # zigzag index -> natural index
-UNZIGZAG = np.argsort(ZIGZAG)  # natural index -> zigzag index
 
 
 def _dct_basis() -> np.ndarray:
@@ -94,7 +93,6 @@ def _canonical_codes(symbols: list[int], length: int) -> dict[int, tuple[int, in
 
 
 _DC_LEN, _AC_LEN = 4, 9
-_DC_CODES = _canonical_codes(_DC_SYMBOLS, _DC_LEN)
 _AC_CODES = _canonical_codes(_AC_SYMBOLS, _AC_LEN)
 
 # vectorized-encoder lookups: bit_length via searchsorted over powers of
@@ -1355,7 +1353,11 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     restart = 0
     frame = None
     prog_stores: list[np.ndarray] | None = None
-    while pos < len(data):
+    while True:
+        # a stream that ends before EOI is truncated: decoding what it
+        # holds would return a partial image
+        if pos + 2 > len(data):
+            raise ValueError("JPEG truncated: no EOI marker")
         if data[pos] != 0xFF:
             raise ValueError("invalid JPEG: expected marker")
         marker = data[pos + 1]
@@ -1364,8 +1366,12 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             break
         if marker in (0x01, *range(0xD0, 0xD8)):  # standalone
             continue
+        if pos + 2 > len(data):
+            raise ValueError("JPEG truncated: incomplete segment length")
         (ln,) = struct.unpack(">H", data[pos : pos + 2])
         seg = data[pos + 2 : pos + ln]
+        if len(seg) != ln - 2:
+            raise ValueError("JPEG truncated or corrupt: segment length")
         pos += ln
         if marker == 0xDB:  # DQT (possibly several tables per segment)
             off = 0
@@ -1434,6 +1440,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                     break  # EOI or next marker
                 raw.append(byte)
                 p += 1
+            else:
+                raise ValueError("JPEG truncated: scan data ends without a marker")
             pos = p
             if not frame["prog"]:
                 return _decode_scan(

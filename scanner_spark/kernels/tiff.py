@@ -241,17 +241,21 @@ _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8, 11: 
 _TYPE_FMT = {1: "B", 3: "H", 4: "I", 6: "b", 8: "h", 9: "i"}
 
 
+def _unpack_from(fmt: str, buf: bytes, off: int) -> tuple:
+    """``struct.unpack_from`` that reports a field past the end of the
+    payload as a truncated TIFF."""
+    if off + struct.calcsize(fmt) > len(buf):
+        raise ValueError("TIFF truncated: field past end of payload")
+    return struct.unpack_from(fmt, buf, off)
+
+
 def _read_tag_values(buf: bytes, e: str, typ: int, count: int, val_off: int) -> list[int]:
     size = _TYPE_SIZES.get(typ)
     if size is None or typ not in _TYPE_FMT:
         return []
     total = size * count
-    if total <= 4:
-        raw = buf[val_off : val_off + total]
-    else:
-        (off,) = struct.unpack_from(f"{e}I", buf, val_off)
-        raw = buf[off : off + total]
-    return list(struct.unpack(f"{e}{count}{_TYPE_FMT[typ]}", raw))
+    off = val_off if total <= 4 else _unpack_from(f"{e}I", buf, val_off)[0]
+    return list(_unpack_from(f"{e}{count}{_TYPE_FMT[typ]}", buf, off))
 
 
 def decode_tiff(data: bytes) -> np.ndarray:
@@ -259,12 +263,12 @@ def decode_tiff(data: bytes) -> np.ndarray:
     if data[:4] not in TIFF_MAGICS:
         raise ValueError("not a TIFF payload")
     e = "<" if data[:2] == b"II" else ">"
-    (ifd_off,) = struct.unpack_from(f"{e}I", data, 4)
-    (n_tags,) = struct.unpack_from(f"{e}H", data, ifd_off)
+    (ifd_off,) = _unpack_from(f"{e}I", data, 4)
+    (n_tags,) = _unpack_from(f"{e}H", data, ifd_off)
     tags: dict[int, list[int]] = {}
     for i in range(n_tags):
         off = ifd_off + 2 + 12 * i
-        tag, typ, count = struct.unpack_from(f"{e}HHI", data, off)
+        tag, typ, count = _unpack_from(f"{e}HHI", data, off)
         tags[tag] = _read_tag_values(data, e, typ, count, off + 8)
     for required in (_W, _H, _STRIP_OFF, _STRIP_CNT):
         if required not in tags:

@@ -45,8 +45,6 @@ import struct
 
 import numpy as np
 
-WEBP_MAGIC = b"RIFF"
-
 
 def is_webp(data: bytes) -> bool:
     return len(data) >= 12 and data[:4] == b"RIFF" and data[8:12] == b"WEBP"
@@ -60,9 +58,8 @@ def is_webp(data: bytes) -> bool:
 class _LsbReader:
     """LSB-first bit reader over a 32-bit per-byte window (round 17):
     ``u(n)`` is one gather + shift instead of an n-iteration bit loop.
-    The window is zero-padded past the stream, but reads past the end
-    raise IndexError exactly where the retired per-bit loop did (a read
-    whose last bit falls beyond the final byte)."""
+    The window is zero-padded past the stream, but a read whose last bit
+    falls beyond the final byte raises ValueError (truncated stream)."""
 
     __slots__ = ("data", "pos", "nbits", "W")
 
@@ -71,9 +68,10 @@ class _LsbReader:
         self.pos = 0
         n = len(data)
         self.nbits = n * 8
-        a = np.zeros(n + 4, dtype=np.uint32)
+        a = np.zeros(n + 5, dtype=np.uint32)
         a[:n] = np.frombuffer(data, dtype=np.uint8)
-        # 32 bits starting at every byte: >= 25 valid bits at any
+        # 32 bits starting at every byte, and at the end of the stream
+        # (a zero word, so a peek there sees padding): >= 25 valid bits at any
         # intra-byte offset, covering the widest field read (18-bit LZ77
         # distance extra + 7-bit offset).  Stored as a PYTHON list: the
         # reads are scalar (one per field/symbol), and list indexing is
@@ -85,7 +83,7 @@ class _LsbReader:
     def u(self, n: int) -> int:
         p = self.pos
         if p + n > self.nbits:
-            raise IndexError("bit read past end of VP8L stream")
+            raise ValueError("VP8L truncated: bit read past end of stream")
         self.pos = p + n
         return (self.W[p >> 3] >> (p & 7)) & ((1 << n) - 1)
 
@@ -230,7 +228,7 @@ class _PrefixDecoder:
                 raise ValueError("corrupt VP8L prefix code")
             ln = e & 15
             if br.pos + ln > br.nbits:
-                raise IndexError("bit read past end of VP8L stream")
+                raise ValueError("VP8L truncated: bit read past end of stream")
             br.pos += ln
             return e >> 4
         code = 0
@@ -280,7 +278,7 @@ def _read_prefix_code(br: _LsbReader, alphabet_size: int) -> _PrefixDecoder:
         # dominant per-image webp decode cost (~0.8 ms/img of method-call
         # overhead through cl.read/br.u) — one window peek per symbol and
         # per extra-bits field, local variables only.  Semantics are
-        # read()'s exactly, including the IndexError on a read whose last
+        # read()'s exactly, including the ValueError on a read whose last
         # bit falls beyond the stream.
         W = br.W
         pos = br.pos
@@ -295,7 +293,7 @@ def _read_prefix_code(br: _LsbReader, alphabet_size: int) -> _PrefixDecoder:
             ln = e & 15
             if pos + ln > nbits:
                 br.pos = pos
-                raise IndexError("bit read past end of VP8L stream")
+                raise ValueError("VP8L truncated: bit read past end of stream")
             pos += ln
             s = e >> 4
             if s < 16:
@@ -312,7 +310,7 @@ def _read_prefix_code(br: _LsbReader, alphabet_size: int) -> _PrefixDecoder:
                     nb, base = 7, 11
                 if pos + nb > nbits:
                     br.pos = pos
-                    raise IndexError("bit read past end of VP8L stream")
+                    raise ValueError("VP8L truncated: bit read past end of stream")
                 v = base + ((W[pos >> 3] >> (pos & 7)) & ((1 << nb) - 1))
                 pos += nb
                 if s == 16:

@@ -699,18 +699,27 @@ def _stream_tmpdir(prefix: str) -> str:
     return _tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-def _stream_session(spark: SparkSession, max_parts: int = 8) -> SparkSession:
-    """Isolated session for ONE streaming query: shares the SparkContext
-    but owns its SQL conf, so sizing the state-store partition count
-    (frozen into the checkpoint at first start) and the parquet
-    nanos-as-long read flag never mutate — or race — the caller's session
-    under concurrent query submission.
+def _stream_table(spark: SparkSession, sf_dir: str, name: str,
+                  max_parts: int = 8) -> DataFrame:
+    """readStream over table ``name`` of ``sf_dir``, on an isolated
+    session for ONE streaming query.  The file stream source wants a
+    directory, so it streams ``sf_dir`` with a glob pinned to the table's
+    file; ``events.ts`` is normalized by dtype (handles long-nanos AND
+    TIMESTAMP_NTZ files under any session; withWatermark requires plain
+    TIMESTAMP).
+
+    The session shares the SparkContext but owns its SQL conf, so sizing
+    the state-store partition count (frozen into the checkpoint at first
+    start) and the parquet nanos-as-long read flag never mutate — or race
+    — the caller's session under concurrent query submission.
 
     State-store partition sizing: a streaming aggregation creates one
     state dir + per-batch commit per shuffle partition.  Inheriting the
     batch shuffle conf (32 here, thousands on a cluster) pays that fixed
     cost for a handful of keys; capping it to key-cardinality scale was a
     4x wall-clock win at sf0.1 (6.7s -> 1.6s)."""
+    import os as _os
+
     ns = spark.newSession()
     # keep caller semantics for the confs that affect event-time results
     for k in (
@@ -724,7 +733,12 @@ def _stream_session(spark: SparkSession, max_parts: int = 8) -> SparkSession:
     ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ns.conf.set("spark.sql.shuffle.partitions", str(min(max_parts, cur)))
-    return ns
+    fname = f"{name}.parquet"
+    raw_schema = ns.read.parquet(_os.path.join(sf_dir, fname)).schema
+    sdf = ns.readStream.schema(raw_schema).option("pathGlobFilter", fname).parquet(sf_dir)
+    if name == "events":
+        sdf = normalize_events_ts(sdf)
+    return sdf
 
 
 def q_stream_events_hourly(spark, sf_dir):
@@ -737,25 +751,10 @@ def q_stream_events_hourly(spark, sf_dir):
     must hash-match the same DuckDB oracle as the batch query — streaming
     and batch semantics agree exactly."""
     import os as _os
-    import tempfile as _tempfile
 
     from scanner_spark.streaming.windows import read_upserted, to_parquet_upsert
 
-    # per-query conf isolation: state-store sizing + parquet read flags
-    # live on this query's own session, never the caller's
-    ss = _stream_session(spark)
-    path = _os.path.join(sf_dir, "events.parquet")
-    raw_schema = ss.read.parquet(path).schema
-    # the file stream source wants a directory: stream the sf_dir with
-    # a glob pinned to the events table
-    sdf = (
-        ss.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # dtype-driven: handles long-nanos AND TIMESTAMP_NTZ files under
-    # any session (withWatermark requires plain TIMESTAMP)
-    sdf = normalize_events_ts(sdf)
+    sdf = _stream_table(spark, sf_dir, "events")
     agg = (
         sdf.withWatermark("ts", "0 seconds")
         .groupBy("event_type", F.window("ts", "1 hour"))
@@ -801,16 +800,8 @@ def q_stream_events_sessions(spark, sf_dir):
     finalized-only contract, state bounded by open sessions — is
     ``q_stream_events_sessions_append`` below."""
     import os as _os
-    import tempfile as _tempfile
 
-    ss = _stream_session(spark)
-    raw_schema = ss.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
-    sdf = (
-        ss.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = normalize_events_ts(sdf)
+    sdf = _stream_table(spark, sf_dir, "events")
     agg = (
         sdf.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -852,7 +843,6 @@ def q_stream_dedup_minhash_lsh(spark, sf_dir):
     colliding in several bands is emitted once per band — different state
     keys cannot coordinate — with an identical score each time.)"""
     import os as _os
-    import tempfile as _tempfile
 
     from scanner_spark.streaming.dedup import banded_minhash_rows, lsh_dedup_pairs
 
@@ -860,20 +850,14 @@ def q_stream_dedup_minhash_lsh(spark, sf_dir):
     # 32 state partitions, not the session-window queries' 8: this op has
     # bands x shards = 128 state groups doing real Python work per group,
     # so the stateful stage should own every core.
-    ss = _stream_session(spark, max_parts=32)
-    raw_schema = ss.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
-    sdf = (
-        ss.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = _stream_table(spark, sf_dir, "documents", max_parts=32)
     # Starved-scan healing (io.read_table's fix, restated for the stream
     # path): the single test parquet reads as 1-3 effective tasks, which
     # single-threads the md5/signature-fold narrow phase — the measured
     # bulk of this query's 133 s at sf10.  A stateless repartition is
     # streaming-legal and spreads the signature work across the session's
     # cores before the stateful exchange.
-    sdf = sdf.repartition(ss.sparkContext.defaultParallelism)
+    sdf = sdf.repartition(spark.sparkContext.defaultParallelism)
     pairs = lsh_dedup_pairs(
         banded_minhash_rows(sdf), threshold=MINHASH_THRESHOLD
     )
@@ -918,16 +902,8 @@ def q_stream_events_sessions_append(spark, sf_dir):
     delay.  The DuckDB oracle is the same gaps-and-islands CTE truncated
     by exactly that predicate."""
     import os as _os
-    import tempfile as _tempfile
 
-    ss = _stream_session(spark)
-    raw_schema = ss.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
-    sdf = (
-        ss.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = normalize_events_ts(sdf)
+    sdf = _stream_table(spark, sf_dir, "events")
     agg = (
         sdf.withWatermark("ts", SESSION_APPEND_DELAY)
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -964,18 +940,10 @@ def q_stream_events_dedup(spark, sf_dir):
     State = one entry per distinct key (the honest cost of exact dedup;
     bounded by key cardinality, not stream length)."""
     import os as _os
-    import tempfile as _tempfile
 
     from scanner_spark.streaming.windows import to_parquet
 
-    ss = _stream_session(spark)
-    raw_schema = ss.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
-    sdf = (
-        ss.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = normalize_events_ts(sdf)
+    sdf = _stream_table(spark, sf_dir, "events")
     dd = sdf.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )

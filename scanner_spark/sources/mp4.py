@@ -628,18 +628,6 @@ def _decode_avc1_sample(sample: bytes, sps_rbsp_list, pps_rbsp_list,
     return h264.rgb_from_yuv420(y, cb, cr), st
 
 
-def _avc1_sample_kind(sample: bytes, length_size: int) -> tuple[str, bool]:
-    """Peek ('I'|'P'|'B', is_reference) from a sample's first slice NAL
-    without decoding pixels — lets unwanted non-reference samples be
-    skipped entirely by the GOP walk."""
-    from scanner_spark.kernels import h264
-
-    for nal in h264.split_length_prefixed(bytes(sample), length_size):
-        if nal and nal[0] & 0x1F in (1, 5):
-            return h264.slice_kind(nal)
-    raise ValueError("avc1 sample contains no slice NAL")
-
-
 def _avc1_sample_info(sample: bytes, length_size: int,
                       sps: dict, pps: dict) -> dict:
     """Header-peek EVERY slice NAL of one sample (no pixel decode) and

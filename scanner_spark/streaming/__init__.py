@@ -1,7 +1,6 @@
 from scanner_spark.streaming.windows import (
     from_stored,
     tumbling,
-    sliding,
     session,
     stateful_running_agg,
     to_memory,
@@ -11,7 +10,6 @@ from scanner_spark.streaming.windows import (
 __all__ = [
     "from_stored",
     "tumbling",
-    "sliding",
     "session",
     "stateful_running_agg",
     "to_memory",

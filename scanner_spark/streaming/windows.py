@@ -55,30 +55,6 @@ def tumbling(
     )
 
 
-def sliding(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    watermark: str,
-    group_cols: Iterable[str] = (),
-    aggs: dict[str, str] | None = None,
-) -> DataFrame:
-    aggs = aggs or {"*": "count"}
-    exprs = [getattr(F, how)(c).alias(f"{how}_{c.strip('*') or 'rows'}") for c, how in aggs.items()]
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, duration, slide), *group_cols)
-        .agg(*exprs)
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            *group_cols,
-            *[F.col(f"{how}_{c.strip('*') or 'rows'}") for c, how in aggs.items()],
-        )
-    )
-
-
 def session(
     df: DataFrame,
     ts_col: str,

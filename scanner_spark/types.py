@@ -167,17 +167,3 @@ def _png_de(b: bytes):
 
 
 register_type("image", _png_ser, _png_de)
-
-# Spark-native recommendation per logical type (the schema the engine uses
-# when not interoperating through blobs)
-SPARK_NATIVE = {
-    "bytes": "binary",
-    "any": "binary",
-    "ndarray_f32": "array<float>",
-    "ndarray_i32": "array<int>",
-    "variable_list": "array<binary>",
-    "bbox": "struct<x1:float,y1:float,x2:float,y2:float,score:float,label:int>",
-    "bbox_list": "array<struct<x1:float,y1:float,x2:float,y2:float,score:float,label:int>>",
-    "histogram": "array<array<long>>",
-    "image": "binary",
-}

@@ -1,8 +1,10 @@
 """Text / dedup / simsearch / multimodal behavior on constructed inputs
 with known answers, plus the real documents/embeddings tables."""
 
+import hashlib
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,15 +107,6 @@ def test_rolling_fingerprint_unicode_and_empty(docs, spark):
 
 
 # ---- dedup -------------------------------------------------------------------
-
-def test_exact_duplicates(docs):
-    groups = dedup.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0].keep_id == 0 and groups[0].n_dups == 2
-    kept = dedup.dedup_exact(docs)
-    assert kept.count() == 5
-    assert kept.filter("doc_id = 1").count() == 0
-
 
 def test_ngram_jaccard(docs):
     pairs = {
@@ -510,8 +503,39 @@ def test_quantize_embeddings_roundtrip_bound(spark):
 
 # ---- multimodal ------------------------------------------------------------------
 
+def synthetic_media(spark, n: int = 8):
+    """Deterministic media table: image rows carry REAL PNG payloads
+    (in-repo encoder), video/audio rows opaque seeded bytes."""
+    from scanner_spark.kernels.image import encode_png
+
+    rows = []
+    for i in range(n):
+        kind = ["image", "video", "audio"][i % 3]
+        if kind == "image":
+            raw = hashlib.sha256(str(i).encode()).digest() * (64 * 48 * 3 // 32)
+            payload = encode_png(
+                np.frombuffer(raw, dtype=np.uint8).reshape(48, 64, 3)
+            )
+        else:
+            payload = hashlib.sha256(str(i).encode()).digest() * 8
+        rows.append(
+            {
+                "asset_id": i,
+                "media_type": kind,
+                "payload": payload,
+                "meta": {
+                    "width": 64,
+                    "height": 48,
+                    "duration_ms": 3500 + 500 * i,
+                    "codec": "png" if kind == "image" else "fake",
+                },
+            }
+        )
+    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+
+
 def test_decode_image_plumbing(spark):
-    media = multimodal.synthetic_media(spark, 6)
+    media = synthetic_media(spark, 6)
     out = multimodal.decode_image(media.filter("media_type = 'image'"), 8, 8).collect()
     assert len(out) == 2
     r = out[0]
@@ -529,7 +553,7 @@ def test_decode_image_real_png_pixels(spark):
 
     from scanner_spark.kernels.image import decode_png, resize_bilinear
 
-    media = multimodal.synthetic_media(spark, 6).filter("media_type = 'image'")
+    media = synthetic_media(spark, 6).filter("media_type = 'image'")
     rows = {r.asset_id: bytes(r.payload) for r in media.collect()}
     out = {
         r.asset_id: bytes(r.frame)
@@ -547,7 +571,7 @@ def test_decode_image_native_size_bit_exact(spark):
 
     from scanner_spark.kernels.image import decode_png
 
-    media = multimodal.synthetic_media(spark, 6).filter("media_type = 'image'")
+    media = synthetic_media(spark, 6).filter("media_type = 'image'")
     rows = {r.asset_id: bytes(r.payload) for r in media.collect()}
     out = {
         r.asset_id: bytes(r.frame)
@@ -600,15 +624,8 @@ def test_text_to_png_real_payloads(spark):
     assert bytes(imgs[1][0, 0]) == b"hel"
 
 
-def test_extract_features_shape(spark):
-    media = multimodal.synthetic_media(spark, 5)
-    out = multimodal.extract_features(media, dim=16).collect()
-    assert len(out) == 5
-    assert all(len(r.features) == 16 for r in out)
-
-
 def test_sample_video_frames_cardinality(spark):
-    media = multimodal.synthetic_media(spark, 3)
+    media = synthetic_media(spark, 3)
     out = multimodal.sample_video_frames(media, every_ms=1000)
     counts = {r.asset_id: r.n for r in out.groupBy("asset_id").agg(F.count("*").alias("n")).collect()}
     # duration 3500/4000/4500 ms -> 3/4/4 frames

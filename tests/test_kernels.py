@@ -609,11 +609,11 @@ def test_decode_payload_jpeg_real_path_and_no_fake():
     err = out.astype(float) - img.astype(float)
     assert 10 * np.log10(255**2 / max(1e-9, float(np.mean(err**2)))) > 40.0
     # corrupt JPEG body with intact magic: raises (caller picks policy)
-    with pytest.raises(Exception):
+    with pytest.raises(ValueError):
         decode_payload(b"\xff\xd8garbage", 8, 8)
     # GIF now has a real codec: a truncated GIF body with intact magic
     # RAISES (caller picks policy) instead of falling to a fake
-    with pytest.raises(Exception):
+    with pytest.raises(ValueError):
         decode_payload(b"GIF89a" + b"\x00" * 16, 8, 8)
     # unrecognized magic: loud refusal, not fabricated pixels
     with pytest.raises(ValueError, match="no codec"):
@@ -1610,23 +1610,49 @@ def test_gif_background_uses_global_table_with_local_frame_table():
     assert np.array_equal(out[2, 2], lct[1])
 
 
-def test_flac_truncation_raises_value_error_uniformly():
-    """decode_flac's contract is ValueError on corrupt/truncated streams;
-    a truncated rice-coded frame must not escape as IndexError from the
-    vectorized unary gather (ADVICE r7)."""
-    import numpy as np
-    import pytest
-
+def _truncation_case(codec: str):
+    """(encoded payload, decoder returning an array, cut step) for one codec."""
     from scanner_spark.kernels.flac import decode_flac, encode_flac
+    from scanner_spark.kernels.gif import decode_gif, encode_gif
+    from scanner_spark.kernels.image import decode_png
+    from scanner_spark.kernels.jpeg import decode_jpeg, encode_jpeg, encode_jpeg_progressive
+    from scanner_spark.kernels.tiff import decode_tiff, encode_tiff
+    from scanner_spark.kernels.webp import decode_webp, encode_webp
 
-    rng = np.random.default_rng(77)
-    s = rng.integers(-2000, 2000, 3000).astype(np.int16)
-    enc = encode_flac(s, 8000)
-    # every truncation point past the stream header must raise ValueError
-    # (never IndexError); step 7 keeps the fuzz fast but hits all phases
-    for cut in range(50, len(enc) - 1, 7):
-        with pytest.raises(ValueError):
-            decode_flac(enc[:cut])
+    img = np.random.default_rng(5).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
+    grey = np.repeat(img[:, :, :1], 3, axis=2)  # GIF is palettized: byte-per-pixel grey
+    samples = np.random.default_rng(77).integers(-2000, 2000, 3000).astype(np.int16)
+    return {
+        # step 7 keeps the FLAC fuzz fast but hits all phases of the stream
+        "flac": lambda: (encode_flac(samples, 8000), lambda b: decode_flac(b)[0], 7),
+        "png": lambda: (encode_png(img), decode_png, 1),
+        "jpeg": lambda: (encode_jpeg(img, quality=90), decode_jpeg, 1),
+        "jpeg_progressive": lambda: (encode_jpeg_progressive(img, quality=90), decode_jpeg, 1),
+        "gif": lambda: (encode_gif(grey), decode_gif, 1),
+        "webp": lambda: (encode_webp(img), decode_webp, 1),
+        "tiff": lambda: (encode_tiff(img, compression="lzw", predictor=2), decode_tiff, 1),
+    }[codec]()
+
+
+@pytest.mark.parametrize(
+    "codec", ["flac", "png", "jpeg", "jpeg_progressive", "gif", "webp", "tiff"]
+)
+def test_codec_truncation_raises_value_error_uniformly(codec):
+    """A decoder's contract on corrupt/truncated input is ValueError: at
+    every truncation point it raises ValueError or returns exactly what the
+    whole payload decodes to — never an incidental IndexError/struct.error/
+    zlib.error (a truncated rice-coded FLAC frame once escaped as
+    IndexError from the vectorized unary gather, ADVICE r7), and never a
+    silently partial result (a GIF whose LZW data ends early was once
+    zero-padded)."""
+    enc, decode, step = _truncation_case(codec)
+    full = decode(enc)
+    for cut in range(0, len(enc), step):
+        try:
+            out = decode(enc[:cut])
+        except ValueError:
+            continue
+        assert out.shape == full.shape and np.array_equal(out, full), cut
 
 
 def test_optical_flow_batch_equals_pair():
@@ -1635,7 +1661,12 @@ def test_optical_flow_batch_equals_pair():
     import numpy as np
 
     from scanner_spark.frames import pack
-    from scanner_spark.kernels.image import lk_flow_batch, optical_flow_pair
+    from scanner_spark.kernels.image import (
+        _box_sum,
+        _box_sum_batch,
+        lk_flow_batch,
+        optical_flow_pair,
+    )
 
     rng = np.random.default_rng(7)
     rows = []
@@ -1653,6 +1684,10 @@ def test_optical_flow_batch_equals_pair():
     cur = np.stack([np.frombuffer(r[1]["frame"], np.uint8)
                     .reshape(16, 16, 3) for r in rows]).astype(np.float64)
     batch = lk_flow_batch(prev.mean(axis=3), cur.mean(axis=3))
+    # the batched box sum is the 2-D integral-image form slice by slice
+    boxed = _box_sum_batch(prev[..., 0], 2)
+    for i in range(len(rows)):
+        assert np.array_equal(boxed[i], _box_sum(prev[i, ..., 0], 2)), i
     for i, (p, c) in enumerate(rows):
         single = optical_flow_pair([p, c])
         got = np.frombuffer(single["frame"], np.float32)
