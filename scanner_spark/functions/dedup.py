@@ -26,8 +26,10 @@ DuckDB oracle reproduces results bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from scanner_spark.caching import track
 from scanner_spark.functions.hashing import MINHASH_P, h60, minhash_coeffs  # noqa: F401
@@ -37,13 +39,16 @@ DEFAULT_SHINGLE_N = 3
 DEFAULT_MINHASH_K = 16
 DEFAULT_BANDS = 4
 
-# cosine_dup_pairs mega-bucket guard: buckets above this many distinct
-# reps are triangle-split into (chunk_i, chunk_j) sub-tasks so one LSH
-# bucket can never stack an unbounded vector matrix in a single task.
-# Sized from a quiet-box measurement of the per-task block cost (see
-# OPTIMIZATION_r17.md): ~seconds per 8192-rep block at dim 64, i.e. a
-# bounded task, while every observed real bucket (sf10 max: 1973 reps)
-# stays on the exact single-group path.
+# cosine_dup_pairs mega-bucket guard: buckets above this many rows are
+# triangle-split into (chunk_i, chunk_j) sub-tasks so one LSH bucket can
+# never stack an unbounded vector matrix in a single task.  Rows, not
+# distinct vectors, are counted (rows >= distinct vectors, so a split
+# fires no later than a distinct count would) and chunks hash the vector,
+# so exact copies always share a chunk.  Sized from a quiet-box
+# measurement of the per-task block cost (see OPTIMIZATION_r17.md):
+# ~seconds per 8192-vector block at dim 64, i.e. a bounded task, while
+# every observed real bucket (sf10 max: 1973 distinct vectors) stays on
+# the exact single-group path.
 COSINE_SPLIT_CHUNK = 8192
 # df cap on candidate-generating shingles: a shingle shared by d docs emits
 # O(d^2) candidate pairs, so one stop-shingle ("of the and" ...) can go
@@ -545,14 +550,15 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     reachable from it, the canonical cluster id for keep-one-per-cluster
     dedup.  Output: (doc, component).
 
-    Eager: the edge list is computed, counted and resolved before this
-    returns.  One loop runs over one edge list, oriented (larger,
-    smaller).  Each pass counts the edges and then:
+    Eager: the edge list is computed and resolved before this returns.
+    One loop runs over one edge list, oriented (larger, smaller).  Each
+    pass collects at most ``LOCAL_CC_MAX_EDGES + 1`` edges as one Arrow
+    table and then:
 
-    - at or under ``LOCAL_CC_MAX_EDGES``, collects them and finishes with
-      a driver union-find.  Near-dup pair lists at suite scale take this
-      exit on the first pass: the pair pipeline runs once (persist, count,
-      collect).
+    - at or under ``LOCAL_CC_MAX_EDGES``, finishes with a driver
+      union-find and returns the labels as an Arrow local relation.
+      Near-dup pair lists at suite scale take this exit on the first
+      pass: the pair pipeline runs once, in the collect's job.
     - if the edges already form stars centred on their minima, returns
       them as the labels, with no further job.
     - otherwise runs one large-star/small-star round and checkpoints it.
@@ -566,17 +572,28 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         # the pair pipeline (LSH joins / UDF cosine) is the expensive
-        # part: the first count materializes it once for every later read
+        # part: the first pass materializes it once for every later read
         .persist()
     )
     while True:
-        if g.count() <= LOCAL_CC_MAX_EDGES:
-            mapping = _local_components(g.collect())
-            g.unpersist()
-            node_type = g.schema["u"].dataType.simpleString()
-            return g.sparkSession.createDataFrame(
-                list(mapping.items()), f"doc {node_type}, component {node_type}"
+        edges = g.limit(LOCAL_CC_MAX_EDGES + 1).toArrow()
+        if edges.num_rows <= LOCAL_CC_MAX_EDGES:
+            mapping = _local_components(
+                zip(edges["u"].to_pylist(), edges["v"].to_pylist())
             )
+            g.unpersist()
+            node = edges.schema.field("u").type
+            labels = pa.table({
+                "doc": pa.array(list(mapping.keys()), node),
+                "component": pa.array(list(mapping.values()), node),
+            })
+            node_type = g.schema["u"].dataType.simpleString()
+            # at most 2 * LOCAL_CC_MAX_EDGES driver-built rows: one
+            # partition, so a per-component aggregate over the labels
+            # needs no exchange
+            return g.sparkSession.createDataFrame(
+                labels, f"doc {node_type}, component {node_type}"
+            ).coalesce(1)
         if _is_star_forest(g):
             # before any round this reads the persisted pairs, which stay
             # cached for the lazy result
@@ -643,7 +660,6 @@ def cosine_dup_pairs(
     threshold: float = 0.98,
     lsh_bits: int | None = None,
     pairs_mode: str = "all",
-    split_chunk: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: cosine >= threshold within a
     blocking key.  Output: (id_a, id_b, cosine).
@@ -683,6 +699,12 @@ def cosine_dup_pairs(
       in ANY shared bucket — chains through a bucket whose anchor sits
       outside the chain.  Use for clustering (``dedup_clusters`` /
       ``dedup_keep_best``), never for pair reports.
+
+    Plan: the blocking keys are computed once (persisted), a broadcast
+    size guard assigns mega-bucket chunks, ONE exchange on (key, chunk
+    pair) feeds both the exact-duplicate collapse and the per-bucket pair
+    kernel, and the kernel's rep-level rows expand to member ids in the
+    JVM.
     """
     if pairs_mode not in ("all", "star"):
         raise ValueError(f"pairs_mode must be 'all' or 'star', got {pairs_mode!r}")
@@ -690,61 +712,28 @@ def cosine_dup_pairs(
     if block_col:
         keys.append(F.col(block_col).alias("blk"))
     if lsh_bits:
-        from scanner_spark.functions.simsearch import hyperplanes, lsh_bucket
+        from scanner_spark.functions.simsearch import lsh_bucket
 
-        dim = int(df.select(F.size(vec_col).alias("d")).first()["d"])
-        planes = hyperplanes(dim, lsh_bits)
-        keys.append(lsh_bucket(F.col(vec_col), planes).alias("__bucket"))
+        keys.append(lsh_bucket(F.col(vec_col), lsh_bits).alias("__bucket"))
     if not keys:
         keys = [F.lit(0).alias("blk")]
-    # Arrow-batched arithmetic with explicit j-loops over dims: the loop
-    # keeps the SEQUENTIAL summation order of the scalar definition (and
-    # of DuckDB's list_dot_product) — numpy's .sum() would use pairwise
-    # summation and break bit-exact oracle parity.  ~50x faster than the
-    # interpreted zip_with/aggregate HOFs.  Squared norms are computed
-    # ONCE per vector before the pair stage (identical bits to computing
-    # them per pair), so the quadratic stage does only the dot product.
-    @F.pandas_udf("double")
-    def sq_norm(vs: pd.Series) -> pd.Series:
-        A = np.stack(vs.to_numpy()).astype("float64")
-        n = np.zeros(len(A))
-        for j in range(A.shape[1]):
-            n += A[:, j] * A[:, j]
-        return pd.Series(n)
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        sq_norm(F.col(vec_col)).alias("n2"),
-        *keys,
-    )
-    key_names = [c for c in base.columns if c not in ("id", "v", "n2")]
+    # persisted: the size guard and the pair pipeline both read the keys,
+    # and the LSH bucket is a Python UDF pass over every vector
+    base = track(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), *keys))
+    key_names = [c for c in base.columns if c not in ("id", "v")]
     star = pairs_mode == "star"
-
-    # Exact-duplicate collapse BEFORE the quadratic stage: bitwise-equal
-    # vectors (ubiquitous in real corpora — re-crawls, mirrors; the sf1
-    # bench corpus is 10x-duplicated by construction) are grouped to one
-    # representative, the pair stage runs on DISTINCT vectors only, and
-    # pairs expand back afterwards.  A group of m copies costs m output
-    # rows instead of m^2 pair work — the duplicate factor falls out of
-    # the quadratic term entirely.  Bit-exactness is free: cosine of any
-    # member pair equals the representative pair's (identical arrays ->
-    # identical dot and norms).
-    # persist (not eager localCheckpoint): materialization happens on first
-    # action, and partitions stay recomputable from lineage if an executor
-    # dies — checkpointed blocks would not be
-    reps = track(
-        base.groupBy(*key_names, "v", "n2").agg(
-            F.min("id").alias("rid"), F.collect_list("id").alias("ids")
-        )
-    )
 
     # Pair stage as ONE per-bucket Arrow job: grouping by the blocking key
     # ships each DISTINCT vector through the Python boundary exactly once
     # and accumulates the pairwise dots bucket-locally (a rep x rep join
     # would ship both vectors of every candidate pair: ~17 GB of Arrow
     # traffic for the 16.4M candidate pairs of sf10, against ~10 MB).
-    # D[a, b] accumulates dim outer products in j order — the SAME
+    # Arithmetic uses explicit j-loops over dims: the loop keeps the
+    # SEQUENTIAL summation order of the scalar definition (and of DuckDB's
+    # list_dot_product) — numpy's .sum() or matmul would use pairwise
+    # summation and break bit-exact oracle parity.  Squared norms are
+    # computed once per vector (identical bits to computing them per
+    # pair).  D[a, b] accumulates dim outer products in j order — the SAME
     # sequence of scalar multiply-adds as the scalar j-loop — dot/n2
     # round-trip Arrow as exact float64, and the authoritative
     # round()/threshold filter below is a JVM expression.  The Python-side
@@ -754,108 +743,122 @@ def cosine_dup_pairs(
     # rows to the near-threshold ones.  Two memory bounds apply per task:
     # the dot matrix is built in row chunks of <= 8M doubles (64 MB), and
     # the mega-bucket triangle split below caps the rows any one task
-    # stacks at ~2x COSINE_SPLIT_CHUNK (hash-balanced), so both the O(m*dim) vector
-    # matrix and the near-threshold survivor arrays stay bounded however
-    # hot a blocking key gets.
+    # stacks at ~2x COSINE_SPLIT_CHUNK (hash-balanced), so both the
+    # O(m*dim) vector matrix and the near-threshold survivor arrays stay
+    # bounded however hot a blocking key gets.
     pre_threshold = threshold - 1e-6
-    _EMPTY_PAIRS = {
-        "rid_a": pd.Series([], dtype="int64"),
-        "rid_b": pd.Series([], dtype="int64"),
-        "dot": pd.Series([], dtype="float64"),
-        "n2a": pd.Series([], dtype="float64"),
-        "n2b": pd.Series([], dtype="float64"),
-    }
 
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _bucket_pairs(t: pa.Table) -> pa.Table:
         # One block of a bucket: rows of chunk ci (the a side) x rows of
         # chunk cj (the b side).  ci == cj is a triangle (every row of the
         # group is in that chunk; keep b after a), ci < cj a rectangle of
-        # a split mega-bucket.  Chunks are disjoint hash classes of rid, so
-        # each unordered pair appears in exactly one block and the block
-        # union over (ci <= cj) is exactly the bucket's full pair triangle.
-        # Emitted (rid_a, rid_b) need not be rid-ordered — the cosine is
-        # orientation-independent and the all-mode output normalizes ids
-        # with least/greatest.
-        ci, cj = int(pdf["__ci"].iat[0]), int(pdf["__cj"].iat[0])
-        pdf = pdf.sort_values("rid")
-        pa, pb = pdf[pdf["__c"] == ci], pdf[pdf["__c"] == cj]
+        # a split mega-bucket.  Chunks are disjoint hash classes of the
+        # vector, so each unordered pair appears in exactly one block and
+        # the block union over (ci <= cj) is exactly the bucket's full
+        # pair triangle.  Rows are distinct vectors (rid = min member id,
+        # ids = all member ids).  Emitted (rid_a, rid_b) need not be
+        # rid-ordered — the cosine is orientation-independent and the
+        # all-mode output normalizes ids with least/greatest.
+        t = t.sort_by("rid")
+        ci, cj = t["__ci"][0].as_py(), t["__cj"][0].as_py()
+        v = t["v"].combine_chunks()
+        width = pc.list_value_length(v)
+        if pc.min(width).as_py() != pc.max(width).as_py():
+            raise ValueError("cosine_dup_pairs: vectors of mixed lengths")
+        V = v.flatten().to_numpy(zero_copy_only=False).astype("float64")
+        V = V.reshape(len(t), -1)
+        n2 = np.zeros(len(t))
+        for j in range(V.shape[1]):
+            n2 += V[:, j] * V[:, j]
+        # (a, b, dot) index triples; an exact-duplicate group's intra row
+        # is (rep, rep, n2), emitted once, by its chunk's triangle
+        parts: list[tuple[np.ndarray, ...]] = []
+        if ci == cj:
+            dup = np.flatnonzero(pc.list_value_length(t["ids"]).to_numpy() > 1)
+            parts.append((dup, dup, n2[dup]))
+        # a null blocking key forms no bucket (null never equals null) and
+        # emits intra rows only; star scores only blocks holding its anchor
+        cross = not any(t[k].null_count for k in key_names)
+        c = t["__c"].to_numpy()
+        sa, sb = np.flatnonzero(c == ci), np.flatnonzero(c == cj)
         if star:
             # anchor block: the anchor is the bucket's minimum rid, so it
             # heads its (sorted) chunk __ca; it becomes the block's only
             # a-side row, scored against every other row — anchor first,
             # so star pairs come out rid-ordered
-            if int(pdf["__ca"].iat[0]) != ci:
-                pa, pb = pb, pa
-            pa = pa.iloc[:1]
-        if len(pa) == 0 or len(pb) == 0:
-            return pd.DataFrame(_EMPTY_PAIRS)
-        ra, rb = pa["rid"].to_numpy(), pb["rid"].to_numpy()
-        na2 = pa["n2"].to_numpy(dtype="float64")
-        nb2 = pb["n2"].to_numpy(dtype="float64")
-        A = np.stack(pa["v"].to_numpy()).astype("float64")
-        Bm = np.stack(pb["v"].to_numpy()).astype("float64")
-        sqa, sqb = np.sqrt(na2), np.sqrt(nb2)
-        parts: list[tuple[np.ndarray, ...]] = []
-        chunk = max(1, (8 << 20) // len(pb))
-        for s in range(0, len(pa), chunk):
-            e = min(len(pa), s + chunk)
-            D = np.zeros((e - s, len(pb)))
-            Ac = A[s:e]
-            for j in range(A.shape[1]):
-                D += np.multiply.outer(Ac[:, j], Bm[:, j])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                keep = D / (sqa[s:e, None] * sqb[None, :]) >= pre_threshold
-            if ci == cj:  # a-side rows are the leading b-side rows
-                keep &= np.arange(len(pb))[None, :] > np.arange(s, e)[:, None]
-            ri, cix = np.nonzero(keep)
-            parts.append((ra[s + ri], rb[cix], D[ri, cix], na2[s + ri], nb2[cix]))
-        cols = [np.concatenate(c) for c in zip(*parts)]
-        return pd.DataFrame(
-            {"rid_a": cols[0], "rid_b": cols[1], "dot": cols[2],
-             "n2a": cols[3], "n2b": cols[4]}
-        )
+            ca = t["__ca"][0].as_py()
+            cross &= ca in (ci, cj)
+            if ca != ci:
+                sa, sb = sb, sa
+            sa = sa[:1]
+        if cross and len(sa) and len(sb):
+            A, Bm = V[sa], V[sb]
+            sqa, sqb = np.sqrt(n2[sa]), np.sqrt(n2[sb])
+            chunk = max(1, (8 << 20) // len(sb))
+            for s in range(0, len(sa), chunk):
+                e = min(len(sa), s + chunk)
+                D = np.zeros((e - s, len(sb)))
+                Ac = A[s:e]
+                for j in range(A.shape[1]):
+                    D += np.multiply.outer(Ac[:, j], Bm[:, j])
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    keep = D / (sqa[s:e, None] * sqb[None, :]) >= pre_threshold
+                if ci == cj:  # a-side rows are the leading b-side rows
+                    keep &= np.arange(len(sb))[None, :] > np.arange(s, e)[:, None]
+                ri, cix = np.nonzero(keep)
+                parts.append((sa[s + ri], sb[cix], D[ri, cix]))
+        ia = np.concatenate([p[0] for p in parts] + [np.empty(0, "int64")])
+        ib = np.concatenate([p[1] for p in parts] + [np.empty(0, "int64")])
+        dot = np.concatenate([p[2] for p in parts] + [np.empty(0)])
+        return pa.table({
+            "rid_a": t["rid"].take(ia), "rid_b": t["rid"].take(ib),
+            "dot": dot, "n2a": n2[ia], "n2b": n2[ib],
+            "ids_a": t["ids"].take(ia), "ids_b": t["ids"].take(ib),
+        })
 
-    # na.drop gives null blocking keys join semantics (null never equals
-    # null, so a null key forms no bucket and emits no cross pairs).
-    # The explicit repartition is load-bearing: the reps exchange is tiny
-    # (keys + one vector per distinct vector), so AQE would coalesce it
-    # to ~1 partition — and the pandas stage plus the whole downstream
-    # pair fan-out (broadcast joins + explodes add no exchange) would run
-    # single-threaded.  A user repartition with an explicit count is
-    # exempt from AQE coalescing; the count follows the session's
-    # parallelism, not a local constant.
-    #
     # Mega-bucket triangle split: a pathological blocking key — one LSH
-    # bucket holding millions of reps — would otherwise stack the WHOLE
+    # bucket holding millions of vectors — would otherwise stack the WHOLE
     # bucket's vector matrix in one task (the §2.5 skew cliff: multi-GB
-    # pandas group, one straggler).  Rows of an oversized bucket are
-    # hashed into nch = ceil(|bucket| / COSINE_SPLIT_CHUNK) chunks;
-    # sub-group (i, j), i <= j, receives chunks i and j and computes the
-    # triangle (i == j) or rectangle (i < j) block.  Every unordered rep
-    # pair lands in exactly one sub-group (same chunk -> that chunk's
-    # triangle, different chunks -> the one (min, max) rectangle), so the
-    # union over sub-groups is exactly the unsplit pair triangle with
-    # per-pair bit-identical dots, while any one task holds ~2
-    # hash-balanced chunks of rows.  Star mode keeps only the sub-groups
-    # that hold the anchor's chunk: nch tasks instead of nch(nch+1)/2.
-    # The oversized-bucket set (with each one's anchor, min rid) is found
-    # with one aggregate over the persisted reps and broadcast back — it
-    # is tiny by construction (each row represents > chunk_sz reps), so
-    # the common case (every real corpus so far: sf10's max block is 1973
-    # reps) pays no window, no sort and no extra exchange of the vector
-    # column: every row left-joins to null, lands in chunk 0 of 1 and
-    # takes the whole bucket as one group.  (A first cut used
-    # row_number over the bucket instead: exact chunk bounds, but the
-    # window's exchange+sort of the full reps table measured +8-9 s on
-    # the sf10 row — the guard must be free when it does not trigger.)
-    chunk_sz = int(split_chunk if split_chunk is not None else COSINE_SPLIT_CHUNK)
-    nparts = reps.sparkSession.sparkContext.defaultParallelism
-    nn = reps.na.drop(subset=key_names)
+    # Arrow group, one straggler).  Rows of an oversized bucket are
+    # hashed by vector into nch = ceil(|bucket rows| / COSINE_SPLIT_CHUNK)
+    # chunks; sub-group (i, j), i <= j, receives chunks i and j and
+    # computes the triangle (i == j) or rectangle (i < j) block.  Every
+    # unordered pair of distinct vectors lands in exactly one sub-group
+    # (same chunk -> that chunk's triangle, different chunks -> the one
+    # (min, max) rectangle), so the union over sub-groups is exactly the
+    # unsplit pair triangle with per-pair bit-identical dots, while any
+    # one task holds ~2 hash-balanced chunks of rows.  Star mode keeps the
+    # triangles and the rectangles that hold the anchor's chunk; a null
+    # key keeps only its triangles, which carry the intra rows.
+    # The oversized-bucket set (with star's anchor chunk) is one aggregate
+    # over the persisted rows, broadcast back (null-safe, so a null key is
+    # split too) — it is tiny by construction (each row represents
+    # > chunk_sz rows), so the common case (every real corpus so far)
+    # pays no window, no sort and no extra exchange of the vector column:
+    # every row left-joins to null, lands in chunk 0 of 1 and takes the
+    # whole bucket as one group.  (A first cut used row_number over the
+    # bucket instead: exact chunk bounds, but the window's exchange+sort
+    # of the full table measured +8-9 s on the sf10 row — the guard must
+    # be free when it does not trigger.)
+    chunk_sz = int(COSINE_SPLIT_CHUNK)
+    nparts = base.sparkSession.sparkContext.defaultParallelism
+    nch = F.ceil(F.col("__n") / F.lit(chunk_sz)).cast("int")
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    if star:
+        # the anchor (min id) heads its duplicate group, so its vector's
+        # hash names the anchor's chunk
+        aggs.append(F.min(F.struct("id", F.xxhash64("v").alias("h")))["h"].alias("__ah"))
     big = (
-        nn.groupBy(*key_names)
-        .agg(F.count(F.lit(1)).alias("__n"), F.min("rid").alias("__anchor"))
+        base.groupBy(*key_names)
+        .agg(*aggs)
         .filter(F.col("__n") > chunk_sz)
+        .select(
+            *[F.col(k).alias(f"__g{k}") for k in key_names],
+            nch.alias("__nch"),
+            *([F.pmod(F.col("__ah"), nch).cast("int").alias("__ca")] if star else []),
+        )
     )
+    on = [F.col(k).eqNullSafe(F.col(f"__g{k}")) for k in key_names]
     sub = (
         F.when(
             F.col("__c") > 0,
@@ -875,94 +878,95 @@ def cosine_dup_pairs(
             lambda j: F.struct(F.col("__c").alias("i"), j.cast("int").alias("j")),
         ),
     )
+    chunk_cols = ["__c", "__ca"] if star else ["__c"]
     cand = (
-        nn.join(F.broadcast(big), key_names, "left")
-        .withColumn(
-            "__nch",
-            F.coalesce(
-                F.ceil(F.col("__n") / F.lit(chunk_sz)).cast("int"), F.lit(1)
-            ),
-        )
-        .withColumn("__c", F.pmod(F.xxhash64("rid"), F.col("__nch")).cast("int"))
-        # anchor chunk; an unsplit bucket has __nch = 1, so 0 whatever
-        # the null __anchor hashes to
-        .withColumn(
-            "__ca", F.pmod(F.xxhash64("__anchor"), F.col("__nch")).cast("int")
-        )
+        base.join(F.broadcast(big), on, "left")
+        .withColumn("__nch", F.coalesce(F.col("__nch"), F.lit(1)))
+        .withColumn("__c", F.pmod(F.xxhash64("v"), F.col("__nch")).cast("int"))
         .withColumn("__sub", F.explode(sub))
         .select(
             *key_names,
-            "rid",
+            "id",
             "v",
-            "n2",
             "__c",
-            "__ca",
+            # an unsplit bucket has no anchor row in `big`: chunk 0 of 1
+            *([F.coalesce(F.col("__ca"), F.lit(0)).alias("__ca")] if star else []),
             F.col("__sub.i").alias("__ci"),
             F.col("__sub.j").alias("__cj"),
         )
     )
+    pairable = F.lit(True)
+    for k in key_names:
+        pairable &= F.col(k).isNotNull()
     if star:
-        cand = cand.filter(
-            (F.col("__ci") == F.col("__ca")) | (F.col("__cj") == F.col("__ca"))
-        )
-    cand = (
+        pairable &= (F.col("__ci") == F.col("__ca")) | (F.col("__cj") == F.col("__ca"))
+    cand = cand.filter((F.col("__ci") == F.col("__cj")) | pairable)
+
+    # The explicit repartition is load-bearing twice over.  It is the
+    # pipeline's one exchange: the exact-duplicate collapse and the kernel
+    # both group on supersets of its keys, so neither adds another.  And
+    # its count is exempt from AQE coalescing: the exchange is small
+    # (keys + one vector per row), so AQE would coalesce it to ~1
+    # partition — and the Arrow stage plus the whole downstream pair
+    # fan-out would run single-threaded.  The count follows the session's
+    # parallelism, not a local constant.
+    #
+    # Exact-duplicate collapse BEFORE the quadratic stage: bitwise-equal
+    # vectors (ubiquitous in real corpora — re-crawls, mirrors; the sf1
+    # bench corpus is 10x-duplicated by construction) are grouped to one
+    # representative in the JVM, so each DISTINCT vector crosses into
+    # Python once and the pair stage runs on distinct vectors only.  A
+    # group of m copies costs m output rows instead of m^2 pair work — the
+    # duplicate factor falls out of the quadratic term entirely.
+    # Bit-exactness is free: cosine of any member pair equals the
+    # representative pair's (identical arrays -> identical dot and norms).
+    reps = (
         cand.repartition(nparts, *key_names, "__ci", "__cj")
-        .groupBy(*key_names, "__ci", "__cj")
-        .applyInPandas(
-            _bucket_pairs, "rid_a long, rid_b long, dot double, n2a double, n2b double"
-        )
+        .groupBy(*key_names, "__ci", "__cj", *chunk_cols, "v")
+        .agg(F.min("id").alias("rid"), F.collect_list("id").alias("ids"))
     )
-
-    def scored(pairs: DataFrame, dot: str, n2a: str, n2b: str) -> DataFrame:
-        return pairs.withColumn(
-            "cosine",
-            F.round(F.col(dot) / (F.sqrt(F.col(n2a)) * F.sqrt(F.col(n2b))), 6),
-        ).filter(F.col("cosine") >= threshold)
-
-    cross = scored(cand, "dot", "n2a", "n2b")
-    # intra-group pairs: identical vectors, cosine = n2/(sqrt(n2)*sqrt(n2))
-    # rounded — the same floating-point path the member pair would take
-    intra = scored(reps.filter(F.size("ids") > 1), "n2", "n2", "n2")
+    rid_t, ids_t = reps.schema["rid"].dataType, reps.schema["ids"].dataType
+    kernel = reps.groupBy(*key_names, "__ci", "__cj").applyInArrow(
+        _bucket_pairs,
+        StructType(
+            [StructField(c, rid_t) for c in ("rid_a", "rid_b")]
+            + [StructField(c, DoubleType()) for c in ("dot", "n2a", "n2b")]
+            + [StructField(c, ids_t) for c in ("ids_a", "ids_b")]
+        ),
+    )
+    # intra rows (rid_a == rid_b, identical vectors) score as
+    # n2/(sqrt(n2)*sqrt(n2)) rounded — the same floating-point path the
+    # member pair would take
+    scored = kernel.withColumn(
+        "cosine",
+        F.round(F.col("dot") / (F.sqrt(F.col("n2a")) * F.sqrt(F.col("n2b"))), 6),
+    ).filter(F.col("cosine") >= threshold)
+    intra = F.col("rid_a") == F.col("rid_b")
     if star:
         # rep-level (anchor, member) edges; each exact-duplicate member
         # links to its group representative (m-1 edges per group)
-        return cross.select(
-            F.col("rid_a").alias("id_a"), F.col("rid_b").alias("id_b"), "cosine"
-        ).unionByName(
-            intra.select(
-                F.col("rid").alias("id_a"), F.explode("ids").alias("id_b"), "cosine"
-            ).filter(F.col("id_a") != F.col("id_b"))
-        )
-    idmap = reps.select("rid", "ids")
-    cross = (
+        return scored.select(
+            F.col("rid_a").alias("id_a"),
+            F.explode(F.when(intra, F.col("ids_b")).otherwise(F.array("rid_b"))).alias("id_b"),
+            "cosine",
+        ).filter(F.col("id_a") != F.col("id_b"))
+    return (
         # rebalance before the group-id expansion: candidate pairs leave
-        # the pandas stage partitioned by blocking key (quadratic in
+        # the Arrow stage partitioned by blocking key (quadratic in
         # bucket size, so hot buckets skew), while (rid_a, rid_b) has
         # ~one distinct value per pair and spreads the explode fan-out
-        # evenly; project first so the exchange carries only the three
-        # columns the expansion needs
-        cross.select("rid_a", "rid_b", "cosine")
+        # evenly; project first so the exchange carries only the columns
+        # the expansion needs
+        scored.select("rid_a", "rid_b", "ids_a", "ids_b", "cosine")
         .repartition(nparts, "rid_a", "rid_b")
-        .join(
-            idmap.select(F.col("rid").alias("rid_a"), F.col("ids").alias("ids_a")),
-            "rid_a",
-        )
-        .join(
-            idmap.select(F.col("rid").alias("rid_b"), F.col("ids").alias("ids_b")),
-            "rid_b",
-        )
-        # expand group x group; output ids ordered per-pair
-        .select(F.explode("ids_a").alias("ia"), F.col("ids_b").alias("ibs"), "cosine")
-        .select("ia", F.explode("ibs").alias("ib"), "cosine")
+        # expand group x group (an intra row keeps each member pair once);
+        # output ids ordered per-pair
+        .select(F.explode("ids_a").alias("ia"), "ids_b", "cosine", intra.alias("__intra"))
+        .select("ia", F.explode("ids_b").alias("ib"), "cosine", "__intra")
+        .filter(~F.col("__intra") | (F.col("ia") < F.col("ib")))
         .select(
             F.least("ia", "ib").alias("id_a"),
             F.greatest("ia", "ib").alias("id_b"),
             "cosine",
         )
     )
-    intra = (
-        intra.select(F.explode("ids").alias("id_a"), F.col("ids").alias("ibs"), "cosine")
-        .select("id_a", F.explode("ibs").alias("id_b"), "cosine")
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    return cross.unionByName(intra)

@@ -15,6 +15,7 @@ Two paths, same contract:
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -68,27 +69,37 @@ def hyperplanes(dim: int, bits: int, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]):
-    """Bucket id = sign-bit pattern of the vector against each hyperplane.
+@functools.lru_cache(maxsize=None)
+def _plane_matrix(dim: int, bits: int) -> np.ndarray:
+    return np.asarray(hyperplanes(dim, bits), dtype="float64")  # (bits, dim)
+
+
+def lsh_bucket(vec_col, bits: int):
+    """Bucket id = sign-bit pattern of the vector against each of ``bits``
+    hyperplanes (``hyperplanes(dim, bits)``, dim = the vectors' length,
+    read from each batch; vectors of mixed lengths raise ``ValueError``).
 
     One Arrow-batched pandas UDF doing a (batch x dim) @ (dim x bits)
     numpy matmul — a single vectorized pass.  (The per-plane JVM
     fold-expression alternative bloats Catalyst analysis/codegen with
     ``bits`` giant literal aggregates and runs slower even at small scale.)
     """
-    pl = np.asarray(planes, dtype="float64")  # (bits, dim)
-    weights = 1 << np.arange(pl.shape[0], dtype="int64")
+    weights = 1 << np.arange(bits, dtype="int64")
 
     @F.pandas_udf("long")
     def bucket(vecs: pd.Series) -> pd.Series:
+        dims = set(vecs.map(len))
+        if len(dims) > 1:
+            raise ValueError(f"lsh_bucket: vectors of mixed lengths {sorted(dims)}")
         m = np.stack(vecs.to_numpy()).astype("float64")  # (batch, dim)
+        pl = _plane_matrix(m.shape[1], bits)
         # per-dim accumulation, NOT matmul: the explicit j-loop reproduces
         # the SEQUENTIAL summation of a scalar dot product (and of DuckDB's
         # list_dot_product), so bucket sign bits are bit-identical to the
         # SQL oracle; numpy's matmul uses pairwise/blocked summation whose
         # rounding can flip a sign at the hyperplane boundary
-        signs = np.empty((m.shape[0], pl.shape[0]), dtype=bool)
-        for b in range(pl.shape[0]):
+        signs = np.empty((m.shape[0], bits), dtype=bool)
+        for b in range(bits):
             acc = np.zeros(m.shape[0])
             for j in range(m.shape[1]):
                 acc += m[:, j] * pl[b, j]
@@ -110,14 +121,12 @@ def knn_lsh(
     """Approximate top-k: score only vectors in the query's LSH bucket
     (plus Hamming-1 neighbor buckets when ``multiprobe``).  Output:
     (id, score)."""
-    dim = len(query)
-    planes = hyperplanes(dim, bits)
     qb = 0
-    for j, p in enumerate(planes):
+    for j, p in enumerate(hyperplanes(len(query), bits)):
         if sum(float(a) * float(b) for a, b in zip(query, p)) > 0:
             qb |= 1 << j
     probe = [qb] + ([qb ^ (1 << j) for j in range(bits)] if multiprobe else [])
-    bucketed = df.withColumn("__bucket", lsh_bucket(F.col(vec_col), planes))
+    bucketed = df.withColumn("__bucket", lsh_bucket(F.col(vec_col), bits))
     cand = bucketed.filter(F.col("__bucket").isin(probe))
     return knn_brute(cand, query, k, vec_col, id_col)
 

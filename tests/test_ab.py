@@ -1,7 +1,9 @@
 """tools/ab.py's run order and verdicts, without Spark."""
 
 import importlib.util
+import json
 import os
+import time
 
 import pytest
 
@@ -70,3 +72,30 @@ def test_last_json_line():
     assert ab.last_json_line('x = 1\n{"failed": 0}\n') == {"failed": 0}
     assert ab.last_json_line("no json here") is None
     assert ab.last_json_line("") is None
+
+
+def test_report_shows_each_sides_run_conditions():
+    def run(cal, par):
+        return {"correct": True, "attempted": 10, "failed": 0,
+                "metrics": {"workload_s": {"value": 1.0, "unit": "s"}},
+                "conditions": {"calibration_sha256_per_s": cal, "default_parallelism": par}}
+
+    bench = {"end_to_end": [{"name": "workload_s", "better": "lower", "bound": 0.25}],
+             "per_layer": []}
+    text = ab.report({"base": [run(1e6, 4), run(2e6, 4), run(3e6, 8)],
+                      "change": [run(5e5, 4), None, {**run(1.0, 4), "conditions": {}}]}, bench)
+    assert "base: calibration median 2e+06 sha256/s; default_parallelism 4, 8 (3 of 3 records read)" in text
+    assert "change: calibration median 5e+05 sha256/s; default_parallelism 4 (1 of 3 records read)" in text
+
+
+def test_run_conditions_reads_the_runs_own_record(tmp_path):
+    results = tmp_path / ".perfbench" / "results"
+    results.mkdir(parents=True)
+    assert ab.run_conditions(str(tmp_path), "w", 1, 0, 0.0) == {}
+    rec = {"env": {"calibration_sha256_per_s": 1.5e6}, "default_parallelism": 4}
+    (results / "w-seed1-trace0-100.json").write_text(json.dumps(rec))
+    (results / "w-seed2-trace0-100.json").write_text(json.dumps({**rec, "default_parallelism": 8}))
+    assert ab.run_conditions(str(tmp_path), "w", 1, 0, 0.0) == {
+        "calibration_sha256_per_s": 1.5e6, "default_parallelism": 4}
+    # a record older than the run is a previous run's
+    assert ab.run_conditions(str(tmp_path), "w", 1, 0, time.time() + 60) == {}

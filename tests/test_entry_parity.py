@@ -118,6 +118,18 @@ def test_parity_cc_distributed(name, spark, ddb, monkeypatch):
     _assert_parity(name, spark, ddb)
 
 
+@pytest.mark.parametrize("name", ["emb_cosine_pairs", "emb_dup_clusters"])
+def test_parity_cosine_split(name, spark, ddb, monkeypatch):
+    """Scale-gate row: with the mega-bucket chunk at 2 rows, most LSH
+    buckets (about 3 vectors each at sf0.001) split into triangle and
+    rectangle sub-groups, which the parity SFs never reach on their own;
+    the pairs and the clusters must still hash-match the oracle."""
+    from scanner_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "COSINE_SPLIT_CHUNK", 2)
+    _assert_parity(name, spark, ddb)
+
+
 def test_kmeans_centroids_agree_across_engines(spark, ddb):
     """Early-warning for the kmeans determinism contract (ADVICE r04):
     parity of the integer OUTPUTS rests on round(…, 6) collapsing float

@@ -238,7 +238,9 @@ def test_cosine_star_mode_clique_components_match_brute(spark):
     [("all", None), ("all", 7), ("star", None), ("star", 7)],
     ids=["None", "7", "star-None", "star-7"],
 )
-def test_cosine_all_pairs_bit_identical_to_join_form(spark, pairs_mode, split_chunk):
+def test_cosine_all_pairs_bit_identical_to_join_form(
+    spark, monkeypatch, pairs_mode, split_chunk
+):
     """The per-bucket pair kernel (applyInPandas, outer-product
     accumulation, slack prefilter) must reproduce a literal pairwise
     replay EXACTLY — same pairs, bit-identical cosine doubles — in both
@@ -250,10 +252,13 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, pairs_mode, split_ch
     exact-duplicate groups to member pairs; ``"star"`` replays only
     (anchor, rep) pairs, anchor = the label's minimum rep id, and links
     each duplicate member to its representative.  ``split_chunk=7``
-    forces the mega-bucket triangle split (the 80-rep bucket becomes 12
-    hash chunks -> 78 triangle/rectangle sub-tasks, 12 of them holding
-    the star anchor's chunk; the 21-rep one 3 chunks) and must reproduce
-    the identical pair set and bits."""
+    (``COSINE_SPLIT_CHUNK`` patched to 7) forces the mega-bucket triangle
+    split (the 82-row bucket becomes 12 vector-hash chunks -> 78
+    triangle/rectangle sub-tasks; star keeps the 12 holding the anchor's
+    chunk and the 11 other triangles; the 21-row one 3 chunks) and must
+    reproduce the identical pair set and bits, each pair once — the
+    duplicate group 0/90/91 sits in a chunk of its own rectangles too,
+    so its intra pairs must come from its triangle alone."""
     import numpy as np
     import pandas as pd
 
@@ -282,12 +287,13 @@ def test_cosine_all_pairs_bit_identical_to_join_form(spark, pairs_mode, split_ch
     threshold = 0.3
     star = pairs_mode == "star"
 
-    got = {
-        (r.id_a, r.id_b): r.cosine
-        for r in dedup.cosine_dup_pairs(
-            df, threshold=threshold, pairs_mode=pairs_mode, split_chunk=split_chunk
-        ).collect()
-    }
+    if split_chunk is not None:
+        monkeypatch.setattr(dedup, "COSINE_SPLIT_CHUNK", split_chunk)
+    rows_out = dedup.cosine_dup_pairs(
+        df, threshold=threshold, pairs_mode=pairs_mode
+    ).collect()
+    got = {(r.id_a, r.id_b): r.cosine for r in rows_out}
+    assert len(got) == len(rows_out)  # each pair once, split or not
 
     # reference: per-pair j-loop dot (sequential scalar adds), JVM round
     # + division reproduced through a Spark expression on the
@@ -378,6 +384,35 @@ def test_knn_lsh_recall(real_embs):
     overlap = len(set(exact) & set(approx))
     assert approx[0] == 0
     assert overlap >= 5
+
+
+def test_lsh_bucket_planes_follow_the_vector_length(spark):
+    """The bucket UDF reads the dimension from its batch: each vector is
+    hashed against ``hyperplanes(len(v), bits)``, the planes the scalar
+    definition uses, and a batch of mixed lengths is refused."""
+    from pyspark.errors import PythonException
+
+    rows = [(i, [float((7 * i + j) % 5) - 2.0 for j in range(5)]) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    got = {
+        r.vec_id: r.b
+        for r in df.select("vec_id", simsearch.lsh_bucket(F.col("embedding"), 4).alias("b"))
+        .collect()
+    }
+    planes = simsearch.hyperplanes(5, 4)
+    for i, v in rows:
+        expect = 0
+        for bit, p in enumerate(planes):
+            acc = 0.0
+            for x, w in zip(v, p):
+                acc += x * w
+            expect |= (acc > 0) << bit
+        assert got[i] == expect
+    mixed = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    with pytest.raises(PythonException, match="ValueError: lsh_bucket: vectors of mixed lengths"):
+        mixed.select(simsearch.lsh_bucket(F.col("embedding"), 4)).collect()
 
 
 def test_knn_ivf_recall_and_partitioning(real_embs):

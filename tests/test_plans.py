@@ -187,6 +187,42 @@ def test_cosine_pairs_blocked_on_lsh_bucket(spark, sf_dir):
     assert "__bucket" in plan
 
 
+def _physical_nodes(node, skip=()):
+    """Pre-order walk of a JVM physical plan (AQE's current plan), not
+    descending into nodes named in ``skip``."""
+    if node.nodeName().startswith("AdaptiveSparkPlan"):
+        node = node.executedPlan()
+    yield node
+    if node.nodeName() in skip:
+        return
+    ch = node.children()
+    for i in range(ch.size()):
+        yield from _physical_nodes(ch.apply(i), skip)
+
+
+def test_cosine_pairs_one_exchange_into_the_kernel(spark, sf_dir):
+    """The exact-duplicate collapse and the per-bucket kernel share one
+    exchange on the blocking key (the size guard arrives by broadcast),
+    and no join maps representatives back to member ids."""
+    import re
+
+    spark.catalog.clearCache()
+    df = Q.q_emb_cosine_pairs(spark, sf_dir)
+    nodes = list(_physical_nodes(df._jdf.queryExecution().executedPlan()))
+    kernel = [n for n in nodes if n.nodeName() == "FlatMapGroupsInArrow"]
+    assert len(kernel) == 1
+    shuffles = [
+        n.outputPartitioning().toString()
+        for n in _physical_nodes(kernel[0], skip=("BroadcastExchange",))
+        if n.nodeName() == "Exchange"
+    ]
+    assert len(shuffles) == 1 and shuffles[0].startswith("hashpartitioning("), shuffles
+    assert "__bucket" in shuffles[0]
+    plan = plan_of(df)
+    join_keys = re.findall(r"(?:Left|Right) keys \[\d+\]: \[(.*)\]", plan)
+    assert not [k for k in join_keys if "rid" in k], join_keys
+
+
 def test_domain_resample_broadcasts_group_counts(spark, sf_dir):
     """The group-count dimension joins back by BROADCAST — the corpus
     itself must not shuffle for a rebalancing decision."""

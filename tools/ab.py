@@ -9,7 +9,10 @@ Checks ``BASE_REF`` out into a detached git worktree under
 alternating which side runs first.  Each run's last stdout line is the
 benchmark's JSON result.  For every metric it prints both medians, the
 base side's interquartile range, how many pairs the change won (ties
-count for neither side) and each side's failed executions.  Each
+count for neither side), each side's failed executions, and each side's
+run conditions (median calibration rate, default parallelism) read from
+the full records the runs leave in their checkout's
+``.perfbench/results``.  Each
 end-to-end metric that ``BENCHMARK.json`` bounds gets a verdict against
 that bound.  The worktree is removed on exit.
 """
@@ -23,6 +26,7 @@ import shutil
 import statistics
 import subprocess
 import sys
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -96,9 +100,26 @@ def last_json_line(stdout: str) -> dict | None:
         return None
 
 
+def run_conditions(checkout: str, workload: str, seed: int, trace: int, since: float) -> dict:
+    """Calibration rate and default parallelism from the newest full record
+    the run wrote at or after ``since`` (empty when there is none)."""
+    results = os.path.join(checkout, ".perfbench", "results")
+    prefix = f"{workload}-seed{seed}-trace{trace}-"
+    paths = [os.path.join(results, f) for f in os.listdir(results)
+             if f.startswith(prefix)] if os.path.isdir(results) else []
+    paths = [p for p in paths if os.path.getmtime(p) >= since]
+    if not paths:
+        return {}
+    with open(max(paths, key=os.path.getmtime)) as f:
+        record = json.load(f)
+    return {"calibration_sha256_per_s": record["env"]["calibration_sha256_per_s"],
+            "default_parallelism": record["default_parallelism"]}
+
+
 def run_once(checkout: str, workload: str, seed: int, trace: int) -> dict | None:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--trace", str(trace)]
+    since = time.time()
     try:
         proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
                               timeout=RUN_TIMEOUT_S)
@@ -108,7 +129,10 @@ def run_once(checkout: str, workload: str, seed: int, trace: int) -> dict | None
     if proc.returncode:
         print(proc.stderr[-2000:], file=sys.stderr)
         return None
-    return last_json_line(proc.stdout)
+    result = last_json_line(proc.stdout)
+    if result is not None:
+        result["conditions"] = run_conditions(checkout, workload, seed, trace, since)
+    return result
 
 
 def add_worktree(ref: str) -> str:
@@ -128,7 +152,8 @@ def remove_worktree(path: str) -> None:
 
 
 def report(results: dict[str, list[dict | None]], bench: dict) -> str:
-    """The printed table: one row per metric, then each side's failures."""
+    """The printed table: one row per metric, then each side's failures
+    and run conditions."""
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
     bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     names = sorted({k for runs in results.values() for r in runs if r for k in r["metrics"]},
@@ -158,6 +183,15 @@ def report(results: dict[str, list[dict | None]], bench: dict) -> str:
             f"{side}: {sum(r['failed'] for r in done)} failed of "
             f"{sum(r['attempted'] for r in done)} executions; "
             f"{len(runs) - len(done)} of {len(runs)} runs gave no result"
+        )
+        conds = [r["conditions"] for r in done if r.get("conditions")]
+        cal = [c["calibration_sha256_per_s"] for c in conds]
+        par = sorted({c["default_parallelism"] for c in conds})
+        lines.append(
+            f"{side}: calibration median "
+            f"{f'{stats.median(cal):.4g} sha256/s' if cal else 'n/a'}; "
+            f"default_parallelism {', '.join(map(str, par)) or 'n/a'} "
+            f"({len(conds)} of {len(runs)} records read)"
         )
     return "\n".join(lines)
 
